@@ -32,8 +32,8 @@ def _wrap(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessio
         # drop the PREVIOUS query's managed caches: a driver session runs
         # 50 queries back-to-back without calling release_managed itself,
         # and accumulated persisted blocks pressure an unknown-size heap
-        # (deliberately session-lived caches — alpha/IC/pair tables — are
-        # localCheckpoint leaves, not managed, and survive this)
+        # (the session tables of sources.catalog.shared — bars, alpha,
+        # IC, pairs, ... — are not managed and survive this)
         release_managed()
         return fn(spark, sf_dir)
 

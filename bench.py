@@ -8,6 +8,15 @@ JSON line:
 Each query is executed to completion with a noop sink (full computation,
 no driver-side materialization cost), timed individually. A warmup query
 runs first so JVM/codegen startup is not billed to the first query.
+
+Shared session tables (`sources.catalog.shared`: bars, IVF chain,
+shingles, n-gram pairs, alpha, IC, table plans, counts) are built inside
+their first consumer's timed region. The registry records each build's
+exclusive seconds; they are reported as `_build:<table>` entries (summed
+over the run) and subtracted from the consumer, so a query's entry is its
+own cost. `_build:alpha + alpha101_a` is the number comparable with
+rounds that billed the alpha build to `alpha101_a`. BENCH_DETAIL.json is
+written only by full-suite runs (no query names on the command line).
 """
 
 from __future__ import annotations
@@ -21,6 +30,9 @@ from quantitative_database_and_visualization_platform_spark.plans import QUERIES
 from quantitative_database_and_visualization_platform_spark.session import (
     get_spark,
     release_managed,
+)
+from quantitative_database_and_visualization_platform_spark.sources.catalog import (
+    take_builds,
 )
 
 
@@ -37,52 +49,6 @@ def _execute(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# Shared session-materialized tables (bars / IVF / shingles, r13) are
-# built from parquet inside the FIRST consumer's timed region, which made
-# that consumer's bench number "its own cost + the shared build" and
-# confounded round-over-round per-query diffs (r13 verdict item 2:
-# acf_lag_profile absorbed the bars build, cluster_balanced_sample the
-# IVF chain, bloom_decontamination the shingle leaves). A full-suite run
-# now times each build as an explicit `_build:*` pseudo-query BEFORE the
-# query loop, so consumer queries report their standalone cost. Additive
-# only: no existing entry is removed or renamed, the same computation is
-# still timed from the parquet inputs inside the same session, and the
-# one-line JSON contract is unchanged. Subset runs (explicit argv) skip
-# the pre-builds so a targeted probe still measures build+query like the
-# old protocol (and like the driver's correctness gate does).
-def _shared_builds() -> dict:
-    from quantitative_database_and_visualization_platform_spark.factors.panel import (
-        bars_table,
-    )
-    from quantitative_database_and_visualization_platform_spark.plans.pipeline_queries import (
-        _ivf_chain,
-        _shingles_table,
-    )
-
-    def build_shingles(spark, sf_dir):
-        _shingles_table(spark, sf_dir, k=3, distinct=True)
-        _shingles_table(spark, sf_dir, k=3, distinct=False)
-        _shingles_table(spark, sf_dir, k=5, distinct=True)
-
-    from quantitative_database_and_visualization_platform_spark.plans.pipeline_queries import (
-        _ngram_pairs,
-    )
-
-    return {
-        "_build:bars": lambda spark, sf_dir: bars_table(spark, sf_dir),
-        "_build:ivf": lambda spark, sf_dir: _ivf_chain(spark, sf_dir),
-        "_build:shingles": build_shingles,
-        # the shared PPJoin pair table (prefix filter + jaccard verify):
-        # cross_source_dup_matrix, its first alphabetical consumer, was
-        # still absorbing this build (r14; same rationale as the three
-        # entries above). The alpha cache build is deliberately NOT
-        # itemized: alpha101_a's round-over-round comparability IS the
-        # build (the r13 verdict's item-1 done-criterion is stated in
-        # terms of it).
-        "_build:ngram_pairs": lambda spark, sf_dir: _ngram_pairs(spark, sf_dir),
-    }
-
-
 try:
     _LOAD_START = round(os.getloadavg()[0], 2)
 except OSError:
@@ -97,31 +63,27 @@ def main() -> None:
     # warmup: cheap query to absorb JVM + codegen + parquet-footer startup
     _execute(QUERIES["global_market_stats"](spark, sf_dir))
 
+    take_builds()  # the warmup's table loads are not billed to anyone
+
     timings: dict[str, float] = {}
-    if not sys.argv[1:]:  # full-suite run: itemize the shared-table builds
-        for name, build in _shared_builds().items():
-            t0 = time.perf_counter()
-            try:
-                build(spark, sf_dir)
-                timings[name] = round(time.perf_counter() - t0, 3)
-            except Exception as exc:  # noqa: BLE001 — keep the suite running
-                print(
-                    f"# bench error in {name}: {type(exc).__name__}: {exc}",
-                    file=sys.stderr,
-                )
-                timings[name] = -1.0
+    builds: dict[str, float] = {}
     for name in names:
         t0 = time.perf_counter()
         try:
             _execute(QUERIES[name](spark, sf_dir))
-            timings[name] = round(time.perf_counter() - t0, 3)
+            wall = time.perf_counter() - t0
         except Exception as exc:  # noqa: BLE001 — a broken query must not kill the bench
             print(f"# bench error in {name}: {type(exc).__name__}: {exc}", file=sys.stderr)
-            timings[name] = -1.0
+            wall = None
         finally:
             # drop per-query managed caches so a 55-query session does not
-            # accumulate cached blocks (the shared alpha table is exempt)
+            # accumulate cached blocks (the shared tables are exempt)
             release_managed()
+        built = take_builds()
+        for table, secs in built:
+            builds[table] = builds.get(table, 0.0) + secs
+        timings[name] = -1.0 if wall is None else round(wall - sum(s for _, s in built), 3)
+    timings.update({f"_build:{t}": round(s, 3) for t, s in builds.items()})
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     # quiet-bench protocol (r9): wall times swing +-30% with EXTERNAL
@@ -172,14 +134,18 @@ def main() -> None:
     # line gets truncated away (BENCH_r04/r05: "parsed": null). Emit the
     # slowest queries first until the byte budget is spent and point at
     # the detail file for the rest.
+    # Only a full-suite run replaces it: a subset probe must not clobber
+    # the last suite's record.
+    full_suite = not sys.argv[1:]
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_DETAIL.json")
-    try:
-        with open(detail_path, "w") as fh:
-            json.dump(record, fh)
-            fh.write("\n")
-    except OSError as exc:  # read-only checkout: keep the stdout line anyway
-        print(f"# bench: could not write {detail_path}: {exc}", file=sys.stderr)
+    if full_suite:
+        try:
+            with open(detail_path, "w") as fh:
+                json.dump(record, fh)
+                fh.write("\n")
+        except OSError as exc:  # read-only checkout: keep the stdout line anyway
+            print(f"# bench: could not write {detail_path}: {exc}", file=sys.stderr)
 
     head = {
         "metric": "suite_seconds",
@@ -187,7 +153,7 @@ def main() -> None:
         "unit": "sec",
         "sf": _sf_of(sf_dir),
         "n_queries": len(timings),
-        "detail": "BENCH_DETAIL.json",
+        "detail": "BENCH_DETAIL.json" if full_suite else None,
         "load_1m_start": _LOAD_START,
         "load_1m_end": load_end,
         "load_1m_ambient": load_ambient,

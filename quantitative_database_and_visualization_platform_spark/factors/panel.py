@@ -24,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import context_key
-from ..sources.catalog import load_table, path_sig
+from ..session import checkpoint_sized
+from ..sources.catalog import SHARED_TABLES, load_table, shared, table_path
 
 # DuckDB twin of daily_bars, used as a CTE prefix by every factor oracle.
 O_BARS = """
@@ -171,17 +171,11 @@ def daily_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 # builders here derived the identical panel from the event stream each,
 # at ~0.5-0.9 s per execution at bench scale (measured r13: bars noop
 # recompute 0.602 s vs materialized-leaf read 0.067 s; a typical window
-# consumer 0.947 → 0.555 s). `bars_table` adopts the `_alpha_table`
-# convention (r12-verdict-endorsed): built from the parquet inputs INSIDE
-# the first consumer's timed region each session, lineage-truncated
-# (localCheckpoint leaf) so derived queries analyze a 1-node subtree, AQE
-# off for the one build job, keyed by (session, sf_dir, events file
-# signature) so a rewritten fixture is never served stale, and never
-# persisted across bench/oracle invocations. A production run writes this
-# panel as a parquet/Iceberg table (sources.catalog.write_partitioned is
-# that path); the in-memory leaf is its bench twin.
-_BARS_CACHE: dict[tuple, DataFrame] = {}
+# consumer 0.947 → 0.555 s). A production run writes this panel as a
+# parquet/Iceberg table (sources.catalog.write_partitioned is that path).
 
+# alias of the registry mapping, kept because perfbench/spans.py reads this name
+_BARS_CACHE = SHARED_TABLES
 
 # ~bytes per bar row in Spark's unsafe-row format (2 longs of null bits
 # + key, 1 date, 5 numeric cols + object overhead); only used to SIZE the
@@ -206,17 +200,10 @@ def _leaf_partitions(spark: SparkSession, n_rows: int) -> int:
 
 def bars_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared (code, d, open, high, low, close, volume, amount) panel —
-    `daily_bars` materialized once per (session, sf_dir)."""
-    import os
-
-    from ..session import checkpoint_sized
-
-    sig = path_sig(os.path.join(sf_dir, "events.parquet"))
-    key = (context_key(spark), sf_dir, sig)
-    df = _BARS_CACHE.get(key)
-    if df is None:
-        df = checkpoint_sized(spark, daily_bars(spark, sf_dir), _BAR_ROW_BYTES)
-        for k in [k for k in _BARS_CACHE if k[:2] == key[:2]]:
-            del _BARS_CACHE[k]
-        _BARS_CACHE[key] = df
-    return df
+    `daily_bars` materialized once per session and events file."""
+    return shared(
+        spark,
+        ("bars", sf_dir),
+        (table_path(sf_dir, "events"),),
+        lambda: checkpoint_sized(spark, daily_bars(spark, sf_dir), _BAR_ROW_BYTES),
+    )

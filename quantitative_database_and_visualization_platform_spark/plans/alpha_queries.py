@@ -11,8 +11,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..factors.alpha101 import ALPHA_COLS, with_alphas
-from ..factors.panel import O_BARS, bars_table
-from ..session import context_key
+from ..factors.panel import _BAR_ROW_BYTES, O_BARS, bars_table, daily_bars
+from ..session import checkpoint_sized, local_leaf
+from ..sources.catalog import shared, table_path
 from .oracle_prune import prune_alpha_oracle
 from .registry import query
 
@@ -1176,30 +1177,19 @@ def _ic_scan(spark: SparkSession, sf_dir: str, cols: list[str]) -> DataFrame:
     )
 
 
-# The full-width IC result is computed ONCE per (session, sf_dir) and
-# shared by alpha_ic_scan and the four gate splits — valid because every
-# IC row is per-factor independent (r_f is ranked per (date, factor),
-# r_r per date on the wide panel, corr per (factor, date) group), so a
-# factor-subset scan and a row filter of the full scan are the same
-# relation. The cached table is 101 rows × 3 columns.
-_IC_CACHE: dict[tuple[tuple[str, int], str], DataFrame] = {}
-
-
+# The full-width IC result is computed ONCE per session and shared by
+# alpha_ic_scan and the four gate splits — valid because every IC row is
+# per-factor independent (r_f is ranked per (date, factor), r_r per date
+# on the wide panel, corr per (factor, date) group), so a factor-subset
+# scan and a row filter of the full scan are the same relation. The
+# table is 101 rows × 3 columns.
 def _ic_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (context_key(spark), sf_dir)
-    df = _IC_CACHE.get(key)
-    if df is None:
-        df = _ic_scan(spark, sf_dir, list(ALPHA_COLS))
-        # same convention as _alpha_table: truncate lineage so the five
-        # derived queries read a leaf plan, AQE off for the build job
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            df = df.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-        _IC_CACHE[key] = df
-    return df
+    return shared(
+        spark,
+        ("ic", sf_dir),
+        (table_path(sf_dir, "events"),),
+        lambda: local_leaf(spark, _ic_scan(spark, sf_dir, list(ALPHA_COLS))),
+    )
 
 
 @query("alpha_ic_scan")  # rows-only at the gate; full-width oracle in pytest
@@ -1253,109 +1243,85 @@ def _register_ic_gate_parts() -> None:
 _register_ic_gate_parts()
 
 
-# The rounded alpha table is MATERIALIZED once per (session, sf_dir) and
-# shared by alpha101_subset and alpha_ic_scan — the Spark analog of the
-# reference's precomputed factor_db (`database_schema.md:271`): the IC
-# scan reads the factor table, it does not re-run the factor DAG. The
-# cached table is (code, d, 101 doubles) — a few MB at bench scale — and
-# is deliberately kept for the life of the session.
-_ALPHA_CACHE: dict[tuple[tuple[str, int], str], DataFrame] = {}
-
-
+# The rounded alpha table is MATERIALIZED once per session and shared by
+# alpha101_subset and alpha_ic_scan — the Spark analog of the reference's
+# precomputed factor_db (`database_schema.md:271`): the IC scan reads the
+# factor table, it does not re-run the factor DAG. The table is (code, d,
+# 101 doubles) — a few MB at bench scale.
 def _alpha_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (context_key(spark), sf_dir)
-    df = _ALPHA_CACHE.get(key)
-    if df is None:
-        # Fail FAST on a heap that cannot fit the 101-alpha build: a
-        # 1.07 GB local-mode driver demonstrably OOM-KILLS the whole
-        # SparkContext mid-build (r9 rehearsal; verified at both 32 and
-        # 8 shuffle partitions), which would poison every query AFTER
-        # this one in a 50-query gate session ("Connection refused" for
-        # the rest). Raising a python error instead keeps the context
-        # alive, so only the alpha family reports red. The threshold is
-        # conservative — below it the build cannot succeed anyway; the
-        # build is verified green at 8 GB and sessions in between are
-        # allowed to try.
-        try:
-            heap = (
-                spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
-            )
-        except Exception:  # noqa: BLE001 — connect-mode or JVM gone: just try
-            heap = None
-        if heap is not None and heap < 1_400_000_000:
-            raise RuntimeError(
-                f"driver heap {heap / 1e9:.2f} GB is too small for the "
-                "101-alpha cache build (a ~1 GB heap OOM-kills the "
-                "SparkContext); launch with spark.driver.memory >= 2g"
-            )
-        # The alpha build reads a defaultParallelism-floored bars leaf,
-        # NOT the shared 4-partition `bars_table` leaf the other ~83 bar
-        # consumers use (r14 item 1, guide §2.2): the ~66k-expression DAG
-        # collapses hundreds of row-level arithmetic projections below
-        # its first exchange, and with AQE off for the build those
-        # pre-shuffle stages ride leaf parallelism with nothing to
-        # re-spread them — cold fresh-JVM probes (tools/alpha_probe.py,
-        # n=3 interleaved, r14 host) measured build exec 81/83/157 s on
-        # the 4-partition leaf (unstable: 4 long tasks on 32 cores are
-        # at the mercy of JIT/GC stalls) vs 58/60 s on the
-        # defaultParallelism leaf and 63/67 s recomputing from events.
-        # The small-floor leaf stays right for the OTHER consumers
-        # (broadcast-chain micro-task storms, r13 §6 measurements); this
-        # one consumer is the documented exception. At 100 TB the
-        # bytes-derived term dominates both floors and they converge.
-        from ..factors.panel import _BAR_ROW_BYTES, daily_bars
-        from ..session import checkpoint_sized
+    return shared(
+        spark,
+        ("alpha", sf_dir),
+        (table_path(sf_dir, "events"),),
+        lambda: _build_alpha(spark, sf_dir),
+    )
 
-        alpha_bars = checkpoint_sized(
-            spark,
-            daily_bars(spark, sf_dir),
-            _BAR_ROW_BYTES,
-            floor=spark.sparkContext.defaultParallelism,
+
+def _build_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Fail FAST on a heap that cannot fit the 101-alpha build: a
+    # 1.07 GB local-mode driver demonstrably OOM-KILLS the whole
+    # SparkContext mid-build (r9 rehearsal; verified at both 32 and
+    # 8 shuffle partitions), which would poison every query AFTER
+    # this one in a 50-query gate session ("Connection refused" for
+    # the rest). Raising a python error instead keeps the context
+    # alive, so only the alpha family reports red. The threshold is
+    # conservative — below it the build cannot succeed anyway; the
+    # build is verified green at 8 GB and sessions in between are
+    # allowed to try.
+    try:
+        heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    except Exception:  # noqa: BLE001 — connect-mode or JVM gone: just try
+        heap = None
+    if heap is not None and heap < 1_400_000_000:
+        raise RuntimeError(
+            f"driver heap {heap / 1e9:.2f} GB is too small for the "
+            "101-alpha cache build (a ~1 GB heap OOM-kills the "
+            "SparkContext); launch with spark.driver.memory >= 2g"
         )
-        out = with_alphas(alpha_bars)
-        # floor-based 6dp rounding, not ROUND: alpha values are products
-        # of rank rationals whose shortest decimal representation often
-        # ends in a literal "...5" right at the rounding boundary, and
-        # Spark (BigDecimal of the shortest repr, HALF_UP) disagrees with
-        # DuckDB (multiply-then-round on the raw double) on exactly those
-        # values. floor(x*1e6 + 0.5)/1e6 is identical IEEE on both.
-        df = out.select(
-            "code",
-            "d",
-            *[
-                (F.floor(F.col(c) * 1_000_000 + 0.5) / 1_000_000.0).alias(c)
-                for c in ALPHA_COLS
-            ],
-        )
-        # Materialize the cache eagerly — with AQE off, and with the
-        # lineage TRUNCATED (localCheckpoint), not merely persisted:
-        #
-        # - AQE off for this one job: AQE re-optimizes the REMAINING
-        #   logical plan after every shuffle stage, and with ~30 window
-        #   stages over this DAG that driver-side re-planning is ~25 s of
-        #   pure overhead (measured at sf0.1: exec 70 s → 45 s). Nothing
-        #   is lost at any scale — every shuffle in the build is a
-        #   fixed-shape window/aggregate on the panel axes (no joins for
-        #   AQE to re-plan, and AQE cannot split skewed window partitions
-        #   anyway). Downstream queries (which do join) run with AQE
-        #   restored.
-        # - localCheckpoint instead of persist: a persisted DataFrame
-        #   keeps its full logical plan, so EVERY query derived from the
-        #   cache re-analyzes the whole ~30-layer DAG tree (~2 s per
-        #   derived query × 7 alpha-family queries). Truncating makes the
-        #   table a leaf plan — derived queries analyze a 1-node tree.
-        #   This mirrors the reference, which materializes factor_db and
-        #   reads it back (`database_schema.md:271`); a production run
-        #   would write parquet here (with_alphas(checkpoint_dir=…) is
-        #   that path), the in-memory form is its bench twin.
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            df = df.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-        _ALPHA_CACHE[key] = df
-    return df
+    # The alpha build reads a defaultParallelism-floored bars leaf,
+    # NOT the shared 4-partition `bars_table` leaf the other ~83 bar
+    # consumers use (r14 item 1, guide §2.2): the ~66k-expression DAG
+    # collapses hundreds of row-level arithmetic projections below
+    # its first exchange, and with AQE off for the build those
+    # pre-shuffle stages ride leaf parallelism with nothing to
+    # re-spread them — cold fresh-JVM probes (tools/alpha_probe.py,
+    # n=3 interleaved, r14 host) measured build exec 81/83/157 s on
+    # the 4-partition leaf (unstable: 4 long tasks on 32 cores are
+    # at the mercy of JIT/GC stalls) vs 58/60 s on the
+    # defaultParallelism leaf and 63/67 s recomputing from events.
+    # The small-floor leaf stays right for the OTHER consumers
+    # (broadcast-chain micro-task storms, r13 §6 measurements); this
+    # one consumer is the documented exception. At 100 TB the
+    # bytes-derived term dominates both floors and they converge.
+    alpha_bars = checkpoint_sized(
+        spark,
+        daily_bars(spark, sf_dir),
+        _BAR_ROW_BYTES,
+        floor=spark.sparkContext.defaultParallelism,
+    )
+    out = with_alphas(alpha_bars)
+    # floor-based 6dp rounding, not ROUND: alpha values are products
+    # of rank rationals whose shortest decimal representation often
+    # ends in a literal "...5" right at the rounding boundary, and
+    # Spark (BigDecimal of the shortest repr, HALF_UP) disagrees with
+    # DuckDB (multiply-then-round on the raw double) on exactly those
+    # values. floor(x*1e6 + 0.5)/1e6 is identical IEEE on both.
+    df = out.select(
+        "code",
+        "d",
+        *[
+            (F.floor(F.col(c) * 1_000_000 + 0.5) / 1_000_000.0).alias(c)
+            for c in ALPHA_COLS
+        ],
+    )
+    # Materialized with AQE off (~30 window stages, no joins for AQE to
+    # re-plan, and AQE cannot split skewed window partitions anyway)
+    # and lineage-truncated: a merely persisted DataFrame keeps its
+    # full logical plan, so EVERY derived query re-analyzed the whole
+    # ~30-layer DAG tree (~2 s per derived query × 7 alpha-family
+    # queries). A production run would write parquet here
+    # (with_alphas(checkpoint_dir=…) is that path).
+    return local_leaf(spark, df)
 
 
 @query("alpha101_subset")  # rows-only at the gate; full-width oracle in pytest

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..factors.panel import O_BARS, bars_table
+from ..sources.catalog import load_table, shared, table_path
 from .registry import o_round6, query, round6
 
 # fixed-point scale for returns (≈1e-8 resolution; 150 names × 30 days of
@@ -1962,24 +1963,19 @@ def top_correlated_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the SRP-bucket neighborhoods in embedding_dbscan_core.
 #
 # The universe count is one driver-side metadata-cheap aggregate per
-# (session, sf_dir), memoized — an index-build parameter, same class as
-# the dedup family's _n_docs.
+# session and events file — an index-build parameter, same class as the
+# dedup family's _n_docs.
 # ---------------------------------------------------------------------------
 _PAIR_BLOCK_TARGET = 32  # names per block; block count = ceil(universe/32)
 
-_NCODES_CACHE: dict[tuple, int] = {}
-
 
 def _n_codes(spark: SparkSession, sf_dir: str) -> int:
-    from ..session import context_key
-    from ..sources.catalog import load_table
-
-    key = (context_key(spark), sf_dir)
-    n = _NCODES_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, "events").select("user_id").distinct().count()
-        _NCODES_CACHE[key] = n
-    return n
+    return shared(
+        spark,
+        ("n_codes", sf_dir),
+        (table_path(sf_dir, "events"),),
+        lambda: load_table(spark, sf_dir, "events").select("user_id").distinct().count(),
+    )
 
 
 def _pair_blocks(spark: SparkSession, sf_dir: str) -> int:

@@ -162,8 +162,8 @@ def compare(spark_t: pa.Table, oracle_t: pa.Table) -> list[str]:
 
 # per-query wall-times from the most recent check_query calls, so a
 # "driver can't finish the oracle" regression is visible in the parity
-# run before the driver ever sees it (tests/conftest.py dumps this to
-# ORACLE_TIMINGS.json at session end)
+# run before the driver ever sees it (tests/conftest.py merges this over
+# ORACLE_TIMINGS.json into the temp dir at session end)
 TIMINGS: dict[str, dict[str, float]] = {}
 
 

@@ -89,16 +89,31 @@ def _quiet_window_warnings(spark: SparkSession) -> SparkSession:
 # many queries those cached blocks would otherwise accumulate and pressure
 # executor memory. Builders register via managed_persist; harnesses
 # (bench.py, oracle_check) call release_managed() after each query's
-# action completes. Deliberately-session-lived caches (the materialized
-# alpha table) use a plain persist() and are NOT registered.
+# action completes. Deliberately session-lived tables (bars, alpha, ...)
+# are localCheckpoint leaves in sources.catalog.shared, not registered.
 
 _MANAGED: list = []
 
 
+def local_leaf(spark, df):
+    """Eager localCheckpoint with AQE off for the build jobs, restored
+    afterwards. AQE re-optimizes the remaining plan after every shuffle
+    stage, which on a many-stage build is pure driver overhead (the
+    101-alpha build: exec 70 s -> 45 s at sf0.1); the leaf is consumed
+    under AQE. Truncating lineage (not persist) makes the leaf a 1-node
+    plan, so derived queries do not re-analyze the build's tree."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
 def checkpoint_sized(spark, df, row_bytes: int, floor: int = 4):
-    """Eager localCheckpoint re-materialized at a data-sized partition
-    count (~64 MB of rows per partition, floored at
-    min(defaultParallelism, floor)).
+    """`local_leaf` re-materialized at a data-sized partition count
+    (~64 MB of rows per partition, floored at min(defaultParallelism,
+    floor)).
 
     A raw checkpoint leaf inherits shuffle.partitions from its build —
     a core-count constant — so every downstream scan of a small panel
@@ -107,23 +122,16 @@ def checkpoint_sized(spark, df, row_bytes: int, floor: int = 4):
     broadcast-build chains that ride leaf parallelism with no exchange
     (8.7 s). The coalesce is RE-CHECKPOINTED because a lazy Coalesce
     over raw blocks measured 1.7x slower than physically merged blocks
-    (interleaved A/B, same session). AQE is off for the build jobs
-    (re-planning overhead only; the leaf is consumed under AQE).
-    `row_bytes` is a per-row unsafe-format estimate used only for
-    SIZING, never correctness."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        leaf = df.localCheckpoint(eager=True)
-        target = max(
-            min(spark.sparkContext.defaultParallelism, floor),
-            -(-leaf.count() * row_bytes // (64 << 20)),
-        )
-        if target < leaf.rdd.getNumPartitions():
-            leaf = leaf.coalesce(target).localCheckpoint(eager=True)
-        return leaf
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    (interleaved A/B, same session). `row_bytes` is a per-row
+    unsafe-format estimate used only for SIZING, never correctness."""
+    leaf = local_leaf(spark, df)
+    target = max(
+        min(spark.sparkContext.defaultParallelism, floor),
+        -(-leaf.count() * row_bytes // (64 << 20)),
+    )
+    if target < leaf.rdd.getNumPartitions():
+        leaf = local_leaf(spark, leaf.coalesce(target))
+    return leaf
 
 
 def managed_persist(df):
@@ -141,7 +149,7 @@ def release_managed() -> None:
 
 
 def context_key(spark: SparkSession) -> tuple[str, int]:
-    """Stable identity for session-scoped caches (_ALPHA_CACHE and kin).
+    """Stable identity for session-scoped caches (sources.catalog.shared).
 
     ``id(spark.sparkContext)`` is NOT stable: after a context is stopped
     and garbage-collected, CPython can reuse the same id for a new

@@ -56,19 +56,25 @@ def spark():
 
 def pytest_sessionfinish(session, exitstatus):
     """Dump per-query Spark/oracle wall-times collected by check_query so
-    an oracle-runtime regression is visible before the driver gate runs."""
+    an oracle-runtime regression is visible before the driver gate runs.
+
+    The merged snapshot goes to the temp dir, never over the tracked
+    ORACLE_TIMINGS.json: refreshing the committed gate-cost snapshot is a
+    deliberate copy of the printed file."""
     import json
     import pathlib
+    import tempfile
 
     from quantitative_database_and_visualization_platform_spark.plans.oracle_check import TIMINGS
 
     if TIMINGS:
-        out = pathlib.Path(__file__).resolve().parent.parent / "ORACLE_TIMINGS.json"
-        # merge with the existing snapshot: a targeted (-k) run must not
-        # clobber the timings of queries it didn't execute
+        tracked = pathlib.Path(__file__).resolve().parent.parent / "ORACLE_TIMINGS.json"
+        out = pathlib.Path(tempfile.gettempdir()) / "ORACLE_TIMINGS.json"
+        # merge with the tracked snapshot: a targeted (-k) run must not
+        # drop the timings of queries it didn't execute
         merged = {}
         try:
-            merged = json.loads(out.read_text())
+            merged = json.loads(tracked.read_text())
         except Exception:
             pass
         merged.update(TIMINGS)
@@ -79,3 +85,4 @@ def pytest_sessionfinish(session, exitstatus):
 
         merged = {k: v for k, v in merged.items() if k in QUERIES}
         out.write_text(json.dumps(dict(sorted(merged.items())), indent=1) + "\n")
+        print(f"\noracle timings written to {out}")

@@ -4,8 +4,10 @@
    file signature): `spark.read.parquet` re-lists the path and re-reads
    footers on every call (measured 98-275 ms per call, guide §1/§6) —
    one memoized plan per immutable file removes that from all 293 query
-   constructions. The memo must NEVER serve stale plans: rewriting the
-   file invalidates the key (stat signature).
+   constructions. Like every table in the `sources.catalog.shared`
+   registry it must NEVER serve stale values: rewriting an input file
+   invalidates the entry (stat signature), pinned for every shared
+   table by test_shared_table_invalidates_on_rewrite.
 
 2. `daily_bars` is rewritten from two row_number windows to
    min_by/max_by aggregates (guide §2.3 "aggregate before you shuffle",
@@ -24,9 +26,6 @@
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -35,8 +34,15 @@ from quantitative_database_and_visualization_platform_spark.factors.panel import
     bars_table,
     daily_bars,
 )
+from quantitative_database_and_visualization_platform_spark.plans import (
+    alpha_queries as aq,
+    backtest_queries as bq,
+    pipeline_queries as pq,
+)
 from quantitative_database_and_visualization_platform_spark.sources.catalog import (
     load_table,
+    shared,
+    take_builds,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -46,30 +52,6 @@ def test_load_table_memoizes_per_session(spark):
     a = load_table(spark, SF, "nation")
     b = load_table(spark, SF, "nation")
     assert a is b, "same session + same file must return the memoized plan"
-
-
-def test_load_table_invalidates_on_rewrite(spark, tmp_path):
-    import duckdb
-
-    sf = str(tmp_path)
-    con = duckdb.connect()
-    try:
-        con.execute(
-            f"COPY (SELECT * FROM read_parquet('{SF}/nation.parquet'))"
-            f" TO '{sf}/nation.parquet' (FORMAT PARQUET)"
-        )
-        first = load_table(spark, sf, "nation")
-        n_first = first.count()
-        # in-place rewrite with fewer rows must be observed, not served stale
-        con.execute(
-            f"COPY (SELECT * FROM read_parquet('{SF}/nation.parquet') LIMIT 3)"
-            f" TO '{sf}/nation.parquet' (FORMAT PARQUET)"
-        )
-        second = load_table(spark, sf, "nation")
-        assert second is not first
-        assert second.count() == 3 and n_first > 3
-    finally:
-        con.close()
 
 
 def _bars_window_spec(spark, sf_dir):
@@ -213,25 +195,74 @@ def test_shingles_table_memoizes_and_matches_raw(spark):
     assert got.count() == want.count() > 0
 
 
-def test_bars_table_invalidates_on_rewrite(spark, tmp_path):
+# shared table -> (input it declares, the size of the value it serves)
+SHARED_CASES = {
+    "load_table": ("events", lambda s, sf: load_table(s, sf, "events").count()),
+    "bars": ("events", lambda s, sf: bars_table(s, sf).count()),
+    "shingles": ("documents", lambda s, sf: pq._shingles_table(s, sf).count()),
+    "ivf": ("embeddings", lambda s, sf: pq._ivf_chain(s, sf)[0].count()),
+    "ngram_pairs": ("documents", lambda s, sf: pq._ngram_pairs(s, sf).count()),
+    "n_docs": ("documents", pq._n_docs),
+    "n_vecs": ("embeddings", pq._n_vecs),
+    "n_codes": ("events", bq._n_codes),
+    "alpha": ("events", lambda s, sf: aq._alpha_table(s, sf).count()),
+    # the IC table is one row per factor either way; days with an IC shrink
+    "ic": ("events", lambda s, sf: aq._ic_table(s, sf).agg(F.sum("n_days")).first()[0]),
+}
+_ENTITY_KEY = {"events": "user_id", "documents": "doc_id", "embeddings": "vec_id"}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        # the 101-alpha DAG builds for over a minute per case
+        pytest.param(n, marks=pytest.mark.full_tier) if n in ("alpha", "ic") else n
+        for n in SHARED_CASES
+    ],
+)
+def test_shared_table_invalidates_on_rewrite(spark, tmp_path, name):
+    """Every shared session table is keyed on the files it is derived
+    from: rewriting its input in place (first 50 rows by entity key, so
+    every size shrinks) must rebuild it, not serve the stale value."""
     import duckdb
 
-    sf = str(tmp_path)
+    table, size = SHARED_CASES[name]
+    sf, src = str(tmp_path), f"{SF}/{table}.parquet"
     con = duckdb.connect()
     try:
-        for t in ("events",):
-            con.execute(
-                f"COPY (SELECT * FROM read_parquet('{SF}/{t}.parquet'))"
-                f" TO '{sf}/{t}.parquet' (FORMAT PARQUET)"
-            )
-        first = bars_table(spark, sf)
-        n_first = first.count()
         con.execute(
-            f"COPY (SELECT * FROM read_parquet('{SF}/events.parquet')"
-            f" LIMIT 50) TO '{sf}/events.parquet' (FORMAT PARQUET)"
+            f"COPY (SELECT * FROM read_parquet('{src}')) TO '{sf}/{table}.parquet' (FORMAT PARQUET)"
         )
-        second = bars_table(spark, sf)
-        assert second is not first
-        assert second.count() <= 50 and n_first > second.count()
+        before = size(spark, sf)
+        con.execute(
+            f"COPY (SELECT * FROM read_parquet('{src}') ORDER BY {_ENTITY_KEY[table]}"
+            f" LIMIT 50) TO '{sf}/{table}.parquet' (FORMAT PARQUET)"
+        )
+        after = size(spark, sf)
     finally:
         con.close()
+    assert after < before, f"{name} served its pre-rewrite value"
+
+
+def test_shared_bills_nested_builds_exclusively(spark, tmp_path):
+    """A build that calls another shared build is billed only its own
+    seconds (the IC build calls the alpha build, n-gram pairs call the
+    shingles build), and a hit records no build."""
+    import time
+
+    def inner():
+        time.sleep(0.5)
+        return 1
+
+    def outer():
+        time.sleep(0.1)
+        return shared(spark, ("inner", str(tmp_path)), (), inner) + 1
+
+    take_builds()
+    assert shared(spark, ("outer", str(tmp_path)), (), outer) == 2
+    assert shared(spark, ("outer", str(tmp_path)), (), outer) == 2
+    secs = dict(take_builds())
+    assert set(secs) == {"inner", "outer"}
+    assert secs["inner"] >= 0.5
+    # inclusive time would be >= 0.6 s
+    assert 0.1 <= secs["outer"] < 0.5

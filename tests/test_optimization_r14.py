@@ -12,6 +12,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from quantitative_database_and_visualization_platform_spark.factors.panel import (
@@ -63,7 +65,9 @@ def test_alpha_bars_input_keeps_build_parallelism(spark):
 # across 25 queries, byte-stable r13→r14 across all 293 captured plans),
 # and the r13-regressed leaf consumers stay SMJ-free. Any other query
 # acquiring an SMJ fails the census the next time its family rep runs.
-# Plan-only (explain, no execution), pinned at sf0.1 like plans/r14/.
+# No query is executed, but building a plan materializes the shared
+# tables it reads (bars, shingles, IVF, n-gram pairs), so the census is
+# not free. Pinned at sf0.1 like plans/r14/, and skipped without it.
 # ---------------------------------------------------------------------------
 SMJ_PINNED = {
     "ann_recall_audit": 3,
@@ -124,11 +128,18 @@ def _smj_count(spark, name: str) -> int:
     return len(re.findall(r"\(\d+\) SortMergeJoin", plan))
 
 
+needs_sf_bench = pytest.mark.skipif(
+    not os.path.isdir(SF_BENCH), reason=f"SMJ census is pinned at {SF_BENCH}"
+)
+
+
+@needs_sf_bench
 @pytest.mark.parametrize("name", sorted(SMJ_PINNED))
 def test_smj_census_pinned(spark, name):
     assert _smj_count(spark, name) == SMJ_PINNED[name]
 
 
+@needs_sf_bench
 @pytest.mark.parametrize("name", SMJ_ZERO_REPS)
 def test_leaf_consumers_stay_broadcast_only(spark, name):
     assert _smj_count(spark, name) == 0

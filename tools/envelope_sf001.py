@@ -4,7 +4,7 @@ the totals land in ENVELOPE_sf001.json — the artifact the "within 2× of
 the oracle engine at the same sf" envelope is computed from.
 
 Why this exists (r12 verdict "What's wrong" #1): the envelope used to be
-read off ORACLE_TIMINGS.json, which conftest refreshes DURING a loaded
+read off ORACLE_TIMINGS.json, which conftest refreshed DURING a loaded
 pytest run (~30 workers + a Spark JVM contending), so the committed
 ratio swung 1.5×→2.4× round to round purely with host load. This tool
 measures the same comparison honestly: single session per engine,
