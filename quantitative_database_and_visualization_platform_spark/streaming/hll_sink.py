@@ -1,17 +1,16 @@
 """Streaming HLL maintenance: a distinct-count sketch kept current by
 MERGING per-micro-batch register partials into a stored register table —
 the sketch twin of rollup_sink's continuous aggregate. Register merge is
-max(), which is idempotent PER REGISTER but the store rewrite still
-rides the batch_id high-water mark so a replayed batch cannot interleave
-with a torn rewrite (same at-least-once contract as the rollup sink; the
-id commits atomically inside the store file, and the store itself
-commits through versioned_store's atomic pointer swap, so a crash
-mid-rewrite can neither lose the accumulated registers nor be mistaken
-for bootstrap).
+max(), which is idempotent per register; the store still commits through
+versioned_store's fold step, whose pointer is both the atomic commit
+point and the batch high-water mark, so a replayed batch is skipped
+without a Spark job and a crash mid-rewrite can neither lose the
+accumulated registers nor be mistaken for bootstrap.
 
 Scale design: each micro-batch shuffles only its OWN (group x 256)
 register cells; the stored table is group-cardinality x 256 rows
-regardless of stream length. Estimates come from the shared
+regardless of stream length, which bounds the versioned commit's driver
+materialization. Estimates come from the shared
 hll_estimate_from_registers collapse, so a streaming deployment reads
 cardinalities without ever re-touching raw events — and the same store
 can be merged ACROSS streams (max of maxes) for a fleet-wide count.
@@ -19,11 +18,21 @@ can be merged ACROSS streams (max of maxes) for a fleet-wide count.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..pipeline.sketches import hll_estimate_from_registers, hll_registers
-from .versioned_store import commit_store, read_store
+from .versioned_store import read_store, start_store_sink
+
+
+def merge(stored: DataFrame | None, batch: DataFrame, group: str = "event_type",
+          element: str = "user_id") -> DataFrame:
+    """Fold one micro-batch's register partials into the stored registers."""
+    delta = hll_registers(batch, group, element)
+    merged = delta if stored is None else stored.unionByName(delta)
+    return merged.groupBy(group, "register").agg(F.max("max_rho").alias("max_rho"))
 
 
 def start_hll_sink(events: DataFrame, store_path: str, group: str = "event_type",
@@ -31,39 +40,8 @@ def start_hll_sink(events: DataFrame, store_path: str, group: str = "event_type"
     """Start a foreachBatch stream maintaining per-group HLL registers at
     store_path. Returns the StreamingQuery; read estimates with
     read_hll_estimates."""
-    spark = events.sparkSession
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # read_store returns None ONLY at true bootstrap (nothing ever
-        # committed); a torn/corrupt store raises and the stream retries
-        current = read_store(spark, store_path)
-        last = (
-            None
-            if current is None
-            else current.agg(F.max("last_batch_id")).collect()[0][0]
-        )
-        if last is not None and batch_id <= last:
-            return  # at-least-once replay: already merged
-        delta = hll_registers(batch_df, group, element)
-        merged = (
-            delta
-            if current is None
-            else current.drop("last_batch_id").unionByName(delta)
-        )
-        out = (
-            merged.groupBy(group, "register")
-            .agg(F.max("max_rho").alias("max_rho"))
-            .withColumn("last_batch_id", F.lit(int(batch_id)))
-        )
-        # (groups x 256)-bounded by construction, so the versioned
-        # commit's driver materialization is bounded
-        commit_store(out, store_path, batch_id)
-
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", store_path + "_ckpt")
-        .start()
+    return start_store_sink(
+        events, store_path, functools.partial(merge, group=group, element=element)
     )
 
 
@@ -71,4 +49,4 @@ def read_hll_estimates(spark, store_path: str, group: str = "event_type") -> Dat
     cur = read_store(spark, store_path)
     if cur is None:
         raise FileNotFoundError(f"no committed HLL store at {store_path}")
-    return hll_estimate_from_registers(cur.drop("last_batch_id"), group)
+    return hll_estimate_from_registers(cur, group)

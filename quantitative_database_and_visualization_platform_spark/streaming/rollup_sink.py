@@ -8,19 +8,14 @@ nightly factor jobs maintain factor_db the same way,
 Scale design: each micro-batch shuffles only ITS OWN partial rollup
 (map-side combined, bucket-count-sized), then merges with the stored
 rollup by summing integer partials — exact under any merge order and
-any micro-batch boundary placement. foreachBatch delivers batches
-AT-LEAST-ONCE, so the merge must also be idempotent per batch_id: the
-store carries the last merged batch_id and a replayed batch (same id
-re-delivered after a failure between the store rewrite and the
-checkpoint commit) is skipped instead of double-counted. The id rides
-IN the store file itself so it commits atomically with the data it
-describes — a sidecar meta file would reintroduce the torn-write
-window it exists to close. The store itself commits through
-versioned_store (write-new-version, atomic pointer swap, GC after):
-a crash at any point leaves the previous committed rollup readable,
-so store loss can never be mistaken for bootstrap. The store is
-bucket-count-sized (tiny); a production deployment swaps in a
-MERGE-capable table format carrying the same batch_id high-water mark.
+any micro-batch boundary placement. Summing is not idempotent, so a
+batch re-delivered by at-least-once foreachBatch must not be merged
+twice: versioned_store's pointer is both the commit point and the
+batch high-water mark, and its fold step skips every id at or below
+it. A crash at any point leaves the previous committed rollup
+readable, so store loss can never be mistaken for bootstrap. A
+production deployment swaps in a MERGE-capable table format carrying
+the same high-water mark.
 """
 
 from __future__ import annotations
@@ -28,13 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .versioned_store import commit_store, read_store
+from .tick_bars import _event_time_type
+from .versioned_store import commit_store  # noqa: F401  (perfbench/spans.py wraps it by this name)
+from .versioned_store import read_store, start_store_sink
 
 
 def _partial_rollup(df: DataFrame) -> DataFrame:
     """(day, event_type) partials with integer cents — mergeable exactly."""
     return (
-        df.withColumn("ts", F.col("ts").cast("timestamp" if df.isStreaming else "timestamp_ntz"))
+        df.withColumn("ts", F.col("ts").cast(_event_time_type(df)))
         .select(
             # direct cast-to-date: for the batch NTZ path this never
             # touches the session zone (date_trunc would promote to the
@@ -53,6 +50,18 @@ def _partial_rollup(df: DataFrame) -> DataFrame:
     )
 
 
+def merge(stored: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """Fold one micro-batch's partials into the stored rollup by summing
+    integer partials. The store is bucket-count-sized (days x types), so
+    the versioned commit's driver materialization is bounded."""
+    delta = _partial_rollup(batch)
+    merged = delta if stored is None else stored.unionByName(delta)
+    return merged.groupBy("day", "event_type").agg(
+        F.sum("event_cnt").alias("event_cnt"),
+        F.sum("value_cents").alias("value_cents"),
+    )
+
+
 def start_rollup_sink(events: DataFrame, store_path: str):
     """Start a foreachBatch stream maintaining the rollup at store_path.
 
@@ -60,53 +69,7 @@ def start_rollup_sink(events: DataFrame, store_path: str):
     `read_rollup` — event_cnt/value_total match a from-scratch batch
     rollup of everything ingested so far, whatever the batch boundaries.
     """
-    spark = events.sparkSession
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Distinguish "store not created yet" (bootstrap) from every other
-        # failure: a transient read error or torn write must RAISE (and be
-        # retried by the stream) — treating it as bootstrap would silently
-        # discard the accumulated rollup and overwrite it with one batch's
-        # delta. read_store encodes exactly that contract (None only when
-        # nothing was ever committed). An old-format store (no
-        # last_batch_id column) keeps its DATA; only the high-water mark
-        # is unknown.
-        current = read_store(spark, store_path)
-        if current is None:
-            last = None
-        elif "last_batch_id" in current.columns:
-            last = current.agg(F.max("last_batch_id")).collect()[0][0]
-        else:
-            last = None
-        if last is not None and batch_id <= last:
-            # at-least-once replay of an already-merged batch: merging it
-            # again would double-count event_cnt/value_cents
-            return
-        delta = _partial_rollup(batch_df)
-        merged = (
-            delta
-            if current is None
-            else current.drop("last_batch_id").unionByName(delta)
-        )
-        out = (
-            merged.groupBy("day", "event_type")
-            .agg(
-                F.sum("event_cnt").alias("event_cnt"),
-                F.sum("value_cents").alias("value_cents"),
-            )
-            .withColumn("last_batch_id", F.lit(int(batch_id)))
-            # the store is bucket-count-sized (days × types), so the
-            # versioned commit's driver materialization is bounded; a
-            # production job uses MERGE INTO on a transactional table.
-        )
-        commit_store(out, store_path, batch_id)
-
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", store_path + "_ckpt")
-        .start()
-    )
+    return start_store_sink(events, store_path, merge)
 
 
 def read_rollup(spark, store_path: str) -> DataFrame:

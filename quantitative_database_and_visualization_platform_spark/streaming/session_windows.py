@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .tick_bars import _event_time_type
+
 GAP = "30 minutes"
 
 
@@ -38,12 +40,7 @@ def session_stats(
     with the session TZ — r12 hostile-TZ sweep finding); the streaming
     path casts to the instant type, which EventTimeWatermark requires.
     """
-    ev = events.withColumn(
-        "ts",
-        # streaming watermarks require the instant type; the batch twin
-        # keeps NTZ so emitted session bounds are session-TZ-independent
-        F.col("ts").cast("timestamp" if events.isStreaming else "timestamp_ntz"),
-    )
+    ev = events.withColumn("ts", F.col("ts").cast(_event_time_type(events)))
     if watermark is not None:
         ev = ev.withWatermark("ts", watermark)
     return (

@@ -11,12 +11,14 @@ answers "which documents repeat 50-token spans verbatim" at any moment
 without ever re-touching raw text, and the stored state is the
 content-defined anchor subsample (≈ tokens/A rows), not the corpus.
 
-At-least-once contract (same as rollup_sink/hll_sink): the store rides
-a batch-id high-water mark — a replayed micro-batch is a no-op — and a
-doc-id anti-join inside the merge makes re-delivered documents
-idempotent even ACROSS batch boundaries (anchors are deterministic in
-the text, so a re-delivered doc could only re-insert identical rows;
-the anti-join keeps the distinct invariant without trusting that).
+At-least-once contract (same as rollup_sink/hll_sink): the store
+commits through versioned_store's fold step, whose pointer is both the
+commit point and the batch high-water mark — a replayed micro-batch is
+a no-op — and a doc-id anti-join inside the merge makes re-delivered
+documents idempotent even ACROSS batch boundaries (anchors are
+deterministic in the text, so a re-delivered doc could only re-insert
+identical rows; the anti-join keeps the distinct invariant without
+trusting that).
 
 Scale note: the versioned store materializes on the driver (its
 documented contract), bounded here by anchor mass — density 1/A of
@@ -34,49 +36,26 @@ gets a watermark/foreachBatch twin (tick bars, rollup, HLL).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..pipeline.dedup import span_anchor_table, span_pair_rollup
-from .versioned_store import commit_store, read_store
+from .versioned_store import read_store, start_store_sink
+
+
+def merge(stored: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """Add the anchors of documents not yet indexed to the stored index."""
+    delta = span_anchor_table(batch.select("doc_id", "text"))
+    if stored is None:
+        return delta
+    # cross-batch redelivery safety: drop docs already indexed
+    delta = delta.join(stored.select("doc_id").distinct(), "doc_id", "left_anti")
+    return stored.unionByName(delta)
 
 
 def start_span_anchor_sink(docs: DataFrame, store_path: str):
     """Start a foreachBatch stream maintaining the distinct
     (doc_id, sh) anchor index at store_path. `docs` needs doc_id + text.
     Returns the StreamingQuery; read pairs with read_span_pairs."""
-    spark = docs.sparkSession
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        current = read_store(spark, store_path)
-        last = (
-            None
-            if current is None
-            else current.agg(F.max("last_batch_id")).collect()[0][0]
-        )
-        if last is not None and batch_id <= last:
-            return  # at-least-once replay: already merged
-        delta = span_anchor_table(batch_df.select("doc_id", "text"))
-        if current is not None:
-            stored = current.drop("last_batch_id")
-            # cross-batch redelivery safety: drop docs already indexed
-            delta = delta.join(
-                stored.select("doc_id").distinct(), "doc_id", "left_anti"
-            )
-            merged = stored.unionByName(delta)
-        else:
-            merged = delta
-        commit_store(
-            merged.withColumn("last_batch_id", F.lit(int(batch_id))),
-            store_path,
-            batch_id,
-        )
-
-    return (
-        docs.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", store_path + "_ckpt")
-        .start()
-    )
+    return start_store_sink(docs, store_path, merge)
 
 
 def read_span_pairs(spark, store_path: str, n_docs: int | None = None) -> DataFrame:
@@ -86,4 +65,4 @@ def read_span_pairs(spark, store_path: str, n_docs: int | None = None) -> DataFr
     cur = read_store(spark, store_path)
     if cur is None:
         raise FileNotFoundError(f"no committed span-anchor store at {store_path}")
-    return span_pair_rollup(cur.drop("last_batch_id"), n_docs=n_docs)
+    return span_pair_rollup(cur, n_docs=n_docs)

@@ -97,19 +97,11 @@ def streaming_minute_bars(events: DataFrame, watermark: str = "5 minutes") -> Da
     )
 
 
-def click_purchase_interval_join(
-    clicks: DataFrame, purchases: DataFrame, within: str = "10 minutes", watermark: str = "5 minutes"
+def _click_purchase_join(
+    clicks: DataFrame, purchases: DataFrame, within: str, watermark: str, how: str
 ) -> DataFrame:
-    """Stream-stream INNER interval join: every (click, purchase) of the
-    same user with the purchase inside (click_ts, click_ts + within].
-
-    The time bound is what makes an unbounded stream-stream join
-    tractable: with event-time watermarks on BOTH sides plus the range
-    condition, each side's state is evicted once the other side's
-    watermark passes the bound — state is O(events per join window), not
-    O(stream length). The same function body runs the batch twin (same
-    join, no state) for the parity test.
-    """
+    """The watermarked clicks x purchases interval join behind both public
+    joins: the same user, purchase inside (click_ts, click_ts + within]."""
     c = (
         clicks.withColumn("click_ts", F.col("ts").cast(_event_time_type(clicks)))
         .select("user_id", "click_ts", F.col("event_id").alias("click_id"))
@@ -130,9 +122,25 @@ def click_purchase_interval_join(
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}"))
     )
-    return c.join(p, cond).select(
+    return c.join(p, cond, how).select(
         "user_id", "click_id", "click_ts", "purchase_id", "purchase_ts", "purchase_value"
     )
+
+
+def click_purchase_interval_join(
+    clicks: DataFrame, purchases: DataFrame, within: str = "10 minutes", watermark: str = "5 minutes"
+) -> DataFrame:
+    """Stream-stream INNER interval join: every (click, purchase) of the
+    same user with the purchase inside (click_ts, click_ts + within].
+
+    The time bound is what makes an unbounded stream-stream join
+    tractable: with event-time watermarks on BOTH sides plus the range
+    condition, each side's state is evicted once the other side's
+    watermark passes the bound — state is O(events per join window), not
+    O(stream length). The same function body runs the batch twin (same
+    join, no state) for the parity test.
+    """
+    return _click_purchase_join(clicks, purchases, within, watermark, "inner")
 
 
 def sliding_type_stats(
@@ -184,26 +192,4 @@ def click_purchase_outer_join(
     the streaming run emits null rows ONLY for clicks the final
     watermark closed, which the test mirrors.
     """
-    c = (
-        clicks.withColumn("click_ts", F.col("ts").cast(_event_time_type(clicks)))
-        .select("user_id", "click_ts", F.col("event_id").alias("click_id"))
-        .withWatermark("click_ts", watermark)
-    )
-    p = (
-        purchases.withColumn("purchase_ts", F.col("ts").cast(_event_time_type(purchases)))
-        .select(
-            F.col("user_id").alias("p_user"),
-            "purchase_ts",
-            F.col("event_id").alias("purchase_id"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    cond = (
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}"))
-    )
-    return c.join(p, cond, "left_outer").select(
-        "user_id", "click_id", "click_ts", "purchase_id", "purchase_ts", "purchase_value"
-    )
+    return _click_purchase_join(clicks, purchases, within, watermark, "left_outer")

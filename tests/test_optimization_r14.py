@@ -67,7 +67,8 @@ def test_alpha_bars_input_keeps_build_parallelism(spark):
 # acquiring an SMJ fails the census the next time its family rep runs.
 # No query is executed, but building a plan materializes the shared
 # tables it reads (bars, shingles, IVF, n-gram pairs), so the census is
-# not free. Pinned at sf0.1 like plans/r14/, and skipped without it.
+# not free. Pinned at sf0.1 (tools/capture_plans.py dumps the plans on
+# demand), and skipped without it.
 # ---------------------------------------------------------------------------
 SMJ_PINNED = {
     "ann_recall_audit": 3,

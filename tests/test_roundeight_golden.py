@@ -1,6 +1,7 @@
-"""Round-8 regression tests: the three r7 ADVICE fixes (Kaplan-Meier
-zero-factor guard, versioned_store torn-legacy classification, pair-query
-degenerate-panel guards) plus bit-parity of the global_ntile helper
+"""Round-8 regression tests: the r7 ADVICE fixes (Kaplan-Meier
+zero-factor guard, pair-query degenerate-panel guards; the
+versioned_store torn-overwrite test lives in test_versioned_store.py)
+plus bit-parity of the global_ntile helper
 against the window-function NTILE it replaces."""
 
 from __future__ import annotations
@@ -49,45 +50,6 @@ def test_kaplan_meier_survival_exactly_zero_when_risk_set_exhausts(spark, tmp_pa
     # earlier points follow the textbook product: 2/3, 1/3
     assert abs(rows[1]["survival"] - 2 / 3) < 2e-6
     assert abs(rows[2]["survival"] - 1 / 3) < 2e-6
-
-
-# ---------------------------------------------------------------------------
-# ADVICE r7 #2 (low): a torn PRE-versioned legacy overwrite (crash after
-# the delete phase) leaves a store directory holding only _temporary /
-# _SUCCESS. That is LOSS of committed state, not bootstrap — read_store
-# must raise so the sink cannot silently restart a continuous aggregate
-# from one batch's delta.
-# ---------------------------------------------------------------------------
-def test_versioned_store_raises_on_torn_legacy_overwrite(spark, tmp_path):
-    from quantitative_database_and_visualization_platform_spark.streaming.versioned_store import read_store
-
-    store = tmp_path / "store"
-    store.mkdir()
-    (store / "_temporary").mkdir()
-    (store / "_SUCCESS").touch()
-    with pytest.raises(Exception):
-        read_store(spark, str(store))
-
-
-def test_versioned_store_bootstrap_classification_still_works(spark, tmp_path):
-    from quantitative_database_and_visualization_platform_spark.streaming.versioned_store import (
-        commit_store,
-        read_store,
-    )
-
-    # never created -> bootstrap
-    assert read_store(spark, str(tmp_path / "nope")) is None
-    # orphan _v_* debris from a crashed FIRST commit (never pointed at)
-    # -> still bootstrap
-    crashed = tmp_path / "crashed"
-    (crashed / "_v_000000000001").mkdir(parents=True)
-    assert read_store(spark, str(crashed)) is None
-    # a real commit round-trips
-    ok = tmp_path / "ok"
-    df = spark.createDataFrame([(1, "a")], "k int, v string")
-    commit_store(df, str(ok), 7)
-    got = read_store(spark, str(ok))
-    assert got is not None and got.collect() == df.collect()
 
 
 # ---------------------------------------------------------------------------

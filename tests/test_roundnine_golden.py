@@ -175,41 +175,6 @@ def test_bloom_bitmap_empty_reference_set(spark):
     assert [r["hit"] for r in hits] == [False, False]
 
 
-def test_commit_store_zero_row_dataframe(spark, tmp_path):
-    """A zero-row commit (e.g. a batch that aggregated to nothing) must
-    publish a readable empty version, not crash createDataFrame."""
-    from quantitative_database_and_visualization_platform_spark.streaming.versioned_store import (
-        commit_store,
-        read_store,
-    )
-
-    store = str(tmp_path / "store")
-    empty = spark.createDataFrame([], "k int, v int, last_batch_id int")
-    commit_store(empty, store, 0)
-    got = read_store(spark, store)
-    assert got is not None and got.count() == 0
-    assert [f.name for f in got.schema.fields] == ["k", "v", "last_batch_id"]
-
-
-def test_sink_highwater_none_on_empty_committed_store(spark, tmp_path):
-    """An EMPTY committed store (0 rows) makes max(last_batch_id) return
-    NULL — the sink must treat that as 'merge everything', exactly like
-    bootstrap, instead of comparing against None."""
-    from pyspark.sql import functions as F
-
-    from quantitative_database_and_visualization_platform_spark.streaming.versioned_store import (
-        commit_store,
-        read_store,
-    )
-
-    store = str(tmp_path / "store")
-    empty = spark.createDataFrame([], "k int, last_batch_id int")
-    commit_store(empty, store, 0)
-    current = read_store(spark, store)
-    last = current.agg(F.max("last_batch_id")).collect()[0][0]
-    assert last is None  # the sinks' `last is not None and ...` guard holds
-
-
 # ---------------------------------------------------------------------------
 # Round-9 operator batch goldens: windowFunnel DP vs a brute-force chain
 # search, margin scoring vs numpy, incremental dedup vs the from-scratch

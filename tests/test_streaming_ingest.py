@@ -403,212 +403,6 @@ def test_zipped_csv_ingest_with_encoding_mix(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_rollup_sink_replay_is_idempotent(spark):
-    """foreachBatch is at-least-once: a batch re-delivered with the SAME
-    batch_id (failure between store rewrite and checkpoint commit) must
-    not be merged twice. Drive merge_batch directly and replay ids."""
-    import shutil
-    import tempfile
-
-    from quantitative_database_and_visualization_platform_spark.sources.catalog import load_table
-    from quantitative_database_and_visualization_platform_spark.streaming import (
-        read_rollup,
-        start_rollup_sink,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="qdvp_rollup_replay_")
-    try:
-        ev = load_table(spark, SF, "events")
-        ev.coalesce(1).write.parquet(f"{tmp}/in")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{tmp}/in")
-        )
-        q = start_rollup_sink(stream, f"{tmp}/store")
-        q.awaitTermination(120)
-        once = read_rollup(spark, f"{tmp}/store").toPandas()
-
-        # simulate the at-least-once redelivery by driving the REAL
-        # merge_batch closure by hand with an already-merged batch id
-        from quantitative_database_and_visualization_platform_spark.streaming.versioned_store import (
-            read_store,
-        )
-
-        batch = spark.read.parquet(f"{tmp}/in")
-        last = (
-            read_store(spark, f"{tmp}/store")
-            .agg(F.max("last_batch_id"))
-            .collect()[0][0]
-        )
-        merge = _extract_merge(stream, f"{tmp}/store")
-        merge(batch, int(last))  # replay: any id <= last must be a no-op
-        twice = read_rollup(spark, f"{tmp}/store").toPandas()
-        key = ["day", "event_type"]
-        assert (
-            twice.sort_values(key).reset_index(drop=True).equals(
-                once.sort_values(key).reset_index(drop=True)
-            )
-        ), "replayed batch was merged twice"
-        # a NEW id still merges
-        merge(batch, int(last) + 1)
-        thrice = read_rollup(spark, f"{tmp}/store").toPandas()
-        assert thrice["event_cnt"].sum() == 2 * once["event_cnt"].sum()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _extract_merge(events, store_path):
-    """Rebuild the merge_batch closure start_rollup_sink installs, from
-    the module's own code path (keeps the test honest w.r.t. the real
-    implementation)."""
-    from quantitative_database_and_visualization_platform_spark.streaming import rollup_sink
-
-    captured = {}
-
-    class _FakeWriteStream:
-        def __init__(self, df):
-            self._df = df
-
-        def foreachBatch(self, fn):
-            captured["fn"] = fn
-            return self
-
-        def trigger(self, **kw):
-            return self
-
-        def option(self, *a):
-            return self
-
-        def start(self):
-            return None
-
-    class _FakeEvents:
-        def __init__(self, df):
-            self.sparkSession = df.sparkSession
-            self.writeStream = _FakeWriteStream(df)
-
-    rollup_sink.start_rollup_sink(_FakeEvents(events), store_path)
-    return captured["fn"]
-
-
-def test_rollup_sink_keeps_old_format_store_data(spark):
-    """A pre-existing store WITHOUT the last_batch_id column (older
-    format) must keep its accumulated data — only the high-water mark is
-    unknown — instead of being discarded and overwritten with one
-    batch's delta."""
-    import datetime as dt
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Row
-
-    tmp = tempfile.mkdtemp(prefix="qdvp_rollup_old_")
-    store = f"{tmp}/store"
-    try:
-        old = spark.createDataFrame(
-            [(dt.date(2024, 1, 1), "click", 5, 500)],
-            "day date, event_type string, event_cnt bigint, value_cents bigint",
-        )
-        old.coalesce(1).write.parquet(store)
-        merge = _extract_merge(old, store)
-        batch = spark.createDataFrame(
-            [Row(ts=dt.datetime(2024, 1, 1, 12, 0), event_type="click", value=1.0)]
-        )
-        merge(batch, 7)
-        from quantitative_database_and_visualization_platform_spark.streaming.versioned_store import (
-            read_store,
-        )
-
-        out = {
-            (r["day"], r["event_type"]): (r["event_cnt"], r["value_cents"])
-            for r in read_store(spark, store).collect()
-        }
-        # 5 accumulated + 1 new, not reset to 1
-        assert out[(dt.date(2024, 1, 1), "click")] == (6, 600)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_rollup_sink_raises_on_corrupt_store(spark):
-    """A store that EXISTS but cannot be read (torn write, corruption)
-    must raise — treating it as bootstrap would silently discard the
-    accumulated rollup."""
-    import datetime as dt
-    import os
-    import shutil
-    import tempfile
-
-    import pytest
-
-    from pyspark.sql import Row
-
-    tmp = tempfile.mkdtemp(prefix="qdvp_rollup_bad_")
-    store = f"{tmp}/store"
-    os.makedirs(store)
-    with open(f"{store}/part-00000.parquet", "w") as f:
-        f.write("this is not parquet")
-    try:
-        dummy = spark.createDataFrame(
-            [Row(ts=dt.datetime(2024, 1, 1), event_type="x", value=1.0)]
-        )
-        merge = _extract_merge(dummy, store)
-        with pytest.raises(Exception):
-            merge(dummy, 0)
-        # and the broken store was NOT clobbered by a one-batch rewrite
-        assert open(f"{store}/part-00000.parquet").read().startswith("this is not")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_versioned_store_crash_semantics(spark, tmp_path):
-    """The r6 ADVICE failure mode: losing the committed store mid-rewrite
-    and mistaking the loss for bootstrap. The versioned commit must
-    (a) keep the OLD version readable while a newer uncommitted version
-    dir exists (crash before the pointer swap), (b) treat orphan version
-    debris with no pointer as bootstrap (crashed FIRST commit — nothing
-    was ever committed), and (c) RAISE when the pointed-at version is
-    missing (real loss, never bootstrap)."""
-    import os
-
-    import pytest
-
-    from quantitative_database_and_visualization_platform_spark.streaming.versioned_store import (
-        commit_store,
-        read_store,
-    )
-
-    store = str(tmp_path / "store")
-    df1 = spark.createDataFrame([(1, 10)], "k int, v int")
-    commit_store(df1.withColumn("last_batch_id", F.lit(0)), store, 0)
-    assert [(r["k"], r["v"]) for r in read_store(spark, store).collect()] == [(1, 10)]
-
-    # (a) crash BEFORE pointer swap: new version dir written, pointer old
-    spark.createDataFrame([(9, 99)], "k int, v int").write.parquet(
-        f"{store}/_v_000000000001"
-    )
-    assert [(r["k"], r["v"]) for r in read_store(spark, store).collect()] == [(1, 10)]
-    # a real commit for the same id then supersedes the debris cleanly
-    commit_store(df1.withColumn("v", F.lit(20)), store, 1)
-    assert [(r["k"], r["v"]) for r in read_store(spark, store).collect()] == [(1, 20)]
-    assert not os.path.exists(f"{store}/_v_000000000000")  # GC'd after swap
-
-    # (b) orphan debris, no pointer ever written -> bootstrap (None)
-    store2 = str(tmp_path / "store2")
-    spark.createDataFrame([(9, 99)], "k int, v int").write.parquet(
-        f"{store2}/_v_000000000000"
-    )
-    assert read_store(spark, store2) is None
-
-    # (c) pointer present but version dir gone -> loss must RAISE
-    import shutil
-
-    ptr = open(f"{store}/_CURRENT").read().strip()
-    shutil.rmtree(f"{store}/{ptr}")
-    with pytest.raises(Exception):
-        read_store(spark, store).collect()
-
-
 def test_streaming_session_windows_match_batch(spark):
     """Native session_window sessions: the streaming run (append mode,
     watermark-finalized sessions only) must equal the batch run of the

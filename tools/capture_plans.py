@@ -1,12 +1,15 @@
-"""Capture .explain("formatted") for a set of queries into plans/r13/.
+"""Capture .explain("formatted") for a set of queries into plans/<round>/.
 
 Usage: python tools/capture_plans.py <suffix> [query ...]
 
 With no query names, captures every query whose baseline bench time is
 >= 1.0 s (read from BENCH_DETAIL-style JSON at $SPARK_GRAFT_BASELINE,
 default /tmp/bench_r13_opt_baseline.json). Writes
-plans/r13/<query>_<suffix>.txt. Uses one warm session; alpha-cache
-builds triggered by construction are paid once like in the bench.
+plans/<round>/<query>_<suffix>.txt, where <round> is
+$SPARK_GRAFT_PLANS_ROUND (default r14); plans/ is git-ignored, so dumps
+are made on demand and never committed. Reads $SPARK_GRAFT_SF_DIR
+(default sf0.1). Uses one warm session; alpha-cache builds triggered by
+construction are paid once like in the bench.
 """
 
 from __future__ import annotations
@@ -15,6 +18,9 @@ import json
 import os
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
 from quantitative_database_and_visualization_platform_spark.plans import QUERIES
 from quantitative_database_and_visualization_platform_spark.session import (
     get_spark,
@@ -22,7 +28,7 @@ from quantitative_database_and_visualization_platform_spark.session import (
 )
 
 OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ROOT,
     "plans",
     os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14"),
 )

@@ -9,6 +9,9 @@ Variants:
   mp1m   : AQE coalesce minPartitionSize=1MB (Spark default)
   mp1m200: minPartitionSize=1MB + shuffle.partitions=200 (cluster-default
            shape; AQE coalesces from a higher initial count)
+  ccp    : base + canChangeCachedPlanOutputPartitioning=true (AQE may
+           coalesce persisted subtrees and their scans)
+  ccp1m  : ccp + minPartitionSize=1MB
 
 Usage: PYTHONPATH=. python tools/partition_ab_probe.py q1 q2 ... [--n=5]
 """
