@@ -17,6 +17,10 @@ over the run) and subtracted from the consumer, so a query's entry is its
 own cost. `_build:alpha + alpha101_a` is the number comparable with
 rounds that billed the alpha build to `alpha101_a`. BENCH_DETAIL.json is
 written only by full-suite runs (no query names on the command line).
+
+A run is `quiet` when the CPU time other processes used while it ran
+(`external_cpu_s`: host busy time minus this process tree's, from /proc)
+stays under a quarter of the host's cores over the run's wall time.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ import os
 import sys
 import time
 
+from perfbench.hostcpu import CpuWindow
 from quantitative_database_and_visualization_platform_spark.plans import QUERIES
 from quantitative_database_and_visualization_platform_spark.session import (
     get_spark,
@@ -49,13 +54,24 @@ def _execute(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-try:
-    _LOAD_START = round(os.getloadavg()[0], 2)
-except OSError:
-    _LOAD_START = -1.0
+def _load_1m() -> float:
+    try:
+        return round(os.getloadavg()[0], 2)
+    except OSError:
+        return -1.0
+
+
+def quiet_verdict(external_cpu_s: float, cpus: int, wall_s: float) -> bool:
+    """True when other processes used less than a quarter of the host's
+    cores over the run."""
+    return external_cpu_s < 0.25 * cpus * wall_s
 
 
 def main() -> None:
+    load_start = _load_1m()
+    window = CpuWindow()
+    window.start()
+    t_start = time.perf_counter()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("qdvp-bench")
     names = sys.argv[1:] or sorted(QUERIES)
@@ -86,45 +102,21 @@ def main() -> None:
     timings.update({f"_build:{t}": round(s, 3) for t, s in builds.items()})
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    # quiet-bench protocol (r9): wall times swing +-30% with EXTERNAL
-    # host load (the r8 "+13% suite drift" was the closing bench running
-    # concurrently with a full pytest rehearsal). Record the 1-minute
-    # load average at start and end so every recorded number carries its
-    # own ambient-load context; treat load_1m_end > ~cpus/4 as "loaded"
-    # and re-run before believing any drift.
-    try:
-        load_end = round(os.getloadavg()[0], 2)
-    except OSError:
-        load_end = -1.0
-    # mechanical quiet verdict (r10): a run counts as quiet iff the
-    # 1-minute load is under cpus/4 at BOTH ends, so round-over-round
-    # comparisons can filter on a field instead of re-reading SCALING
-    # prose. The end sample must measure AMBIENT load, not the bench's
-    # own just-finished 32-thread tail (measured: a bench started at
-    # load 0.07 ends at 9.2 purely from self-load, which would mislabel
-    # every legitimate run) — so stop the session first and let the
-    # 1-minute average decay for 45 s before sampling. An external
-    # workload keeps the average high through the wait; the bench's own
-    # contribution decays to ~half and stops accruing.
+    # the JVM is still alive here, so its CPU time counts as the bench's own
+    host = window.stop()
+    wall = time.perf_counter() - t_start
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 32))
-    spark.stop()
-    time.sleep(45)
-    try:
-        load_ambient = round(os.getloadavg()[0], 2)
-    except OSError:
-        load_ambient = -1.0
-    quiet = bool(
-        0 <= _LOAD_START < cpus / 4 and 0 <= load_ambient < cpus / 4
-    )
+    quiet = quiet_verdict(host["external_cpu_s"], cpus, wall)
+    load_end = _load_1m()
     record = {
         "metric": "suite_seconds",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": _sf_of(sf_dir),
-        "load_1m_start": _LOAD_START,
+        "load_1m_start": load_start,
         "load_1m_end": load_end,
-        "load_1m_ambient": load_ambient,
+        "external_cpu_s": host["external_cpu_s"],
         "quiet": quiet,
     }
     # Full per-query detail goes to a repo file; the stdout line must stay
@@ -154,9 +146,9 @@ def main() -> None:
         "sf": _sf_of(sf_dir),
         "n_queries": len(timings),
         "detail": "BENCH_DETAIL.json" if full_suite else None,
-        "load_1m_start": _LOAD_START,
+        "load_1m_start": load_start,
         "load_1m_end": load_end,
-        "load_1m_ambient": load_ambient,
+        "external_cpu_s": host["external_cpu_s"],
         "quiet": quiet,
     }
     budget = 1800 - len(json.dumps({**head, "queries": {}},

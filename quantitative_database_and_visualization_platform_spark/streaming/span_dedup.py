@@ -21,12 +21,13 @@ identical rows; the anti-join keeps the distinct invariant without
 trusting that).
 
 Scale note: the versioned store materializes on the driver (its
-documented contract), bounded here by anchor mass — density 1/A of
-span positions over the duplication-relevant corpus slice. A 100 TB
-deployment would swap ``commit_store`` for an append-only parquet/Delta
-anchor table partitioned by ``sh`` prefix; the merge logic (anti-join +
-union) and the read-side rollup are unchanged — that swap is exactly
-why pair assembly is not baked into the sink.
+documented contract) and writes each version from there, bounded here
+by anchor mass — density 1/A of span positions over the
+duplication-relevant corpus slice. A 100 TB deployment would swap
+``commit_store`` for an append-only parquet/Delta anchor table
+partitioned by ``sh`` prefix; the merge logic (anti-join + union) and
+the read-side rollup are unchanged — that swap is exactly why pair
+assembly is not baked into the sink.
 
 Reference scope: the reference has no streaming dedup; this follows the
 repo convention that every batch pipeline operator with bounded state

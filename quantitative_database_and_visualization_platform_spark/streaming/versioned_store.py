@@ -3,14 +3,18 @@ span-anchor sinks: versioned parquet subdirectories plus an
 atomically-replaced pointer file.
 
     store_path/
-        _CURRENT            text file naming the committed version dir
-        _v_<batch_id>/      one parquet dir per committed rewrite
+        _CURRENT                            text file naming the committed version
+        _v_<batch_id>/part-00000.parquet    one file per committed rewrite
 
-* Batch N writes a NEW ``_v_<N:012d>`` dir; the pointer is committed
-  with ``os.replace`` (atomic on POSIX) of a temp file; superseded
-  version dirs are garbage-collected only AFTER the swap. A crash at
-  any point leaves either the old committed state (pointer untouched)
-  or the new one (pointer swapped) — never an empty store.
+* Batch N collects the merge to the driver as one Arrow table and
+  writes it with pyarrow into a NEW ``_v_<N:012d>`` dir (replacing any
+  debris a crashed attempt at N left there): a dot-prefixed temp file,
+  fsync'd, then renamed into place — the version costs no Spark job
+  beyond the collect. The pointer is committed with ``os.replace``
+  (atomic on POSIX) of an fsync'd temp file; superseded version dirs
+  are garbage-collected only AFTER the swap. A crash at any point
+  leaves either the old committed state (pointer untouched) or the new
+  one (pointer swapped) — never an empty store.
 * The pointer is the commit point AND the batch high-water mark: the
   version it names is the id of the last merged batch, published by
   the same atomic swap as the data. foreachBatch delivers batches
@@ -40,10 +44,12 @@ import os
 import shutil
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 _POINTER = "_CURRENT"
 _VPREFIX = "_v_"
+_PART = "part-00000.parquet"
 
 Merge = Callable[[DataFrame | None, DataFrame], DataFrame]
 
@@ -98,16 +104,20 @@ def _only_uncommitted_debris(store_path: str) -> bool:
 def commit_store(df: DataFrame, store_path: str, batch_id: int) -> None:
     """Atomically publish `df` (driver-bounded by the caller's contract)
     as the store's new committed version, merged through `batch_id`."""
-    spark = df.sparkSession
-    # materialize to driver rows first so the version write cannot observe
-    # the store it is about to supersede mid-GC (callers keep the store
-    # cardinality-bounded: buckets x types / groups x 256)
-    rows = df.collect()
+    # the merge lands on the driver before any file is touched, so the
+    # write cannot observe the store it is about to supersede (callers
+    # keep the store cardinality-bounded: buckets x types / groups x 256)
+    table = df.toArrow()
     version = f"{_VPREFIX}{int(batch_id):012d}"
     vdir = os.path.join(store_path, version)
-    spark.createDataFrame(rows, df.schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(vdir)
+    shutil.rmtree(vdir, ignore_errors=True)  # debris of a crashed attempt
+    os.makedirs(vdir)
+    tmp = os.path.join(vdir, f".{_PART}.{os.getpid()}")
+    with open(tmp, "wb") as f:
+        pq.write_table(table, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(vdir, _PART))
     tmp = os.path.join(store_path, f".{_POINTER}.{os.getpid()}.{int(batch_id)}")
     with open(tmp, "w") as f:
         f.write(version)
@@ -125,7 +135,8 @@ def fold_batch(spark, store_path: str, merge: Merge, batch: DataFrame, batch_id:
     as `batch_id`, unless that id is already merged (a replay). The store
     is read through `spark`, the session that started the stream: the
     micro-batch's own session is a streaming clone (CBO off), in which a
-    fold measured 1.40 s vs 1.25 s median at sf0.01 on 4 cores."""
+    rollup fold of a twelfth of the sf0.01 events measured 0.42 s vs
+    0.38 s median over 10 folds on a 4-core host."""
     last = committed_batch(store_path)
     if last is not None and batch_id <= last:
         return

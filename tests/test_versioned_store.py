@@ -11,6 +11,7 @@ import datetime as dt
 import os
 import shutil
 import uuid
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import Row
@@ -76,6 +77,45 @@ def test_commit_store_zero_row_dataframe(spark, tmp_path):
     assert [f.name for f in got.schema.fields] == ["k", "v"]
 
 
+def _jobs(sc, fn) -> int:
+    group = f"jobs-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "job census")
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_store_adds_no_spark_job(spark, tmp_path):
+    """The version is written from the driver's Arrow table: a commit
+    runs exactly the jobs of collecting the merge, no write job."""
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    sc = spark.sparkContext
+    store = str(tmp_path / "store")
+    assert _jobs(sc, lambda: commit_store(df, store, 0)) == _jobs(sc, df.toArrow)
+    assert sorted(read_store(spark, store).collect()) == sorted(df.collect())
+
+
+def test_commit_store_round_trips_types(spark, tmp_path):
+    """Every column type a store holds (and the ones none holds yet)
+    reads back with the same Spark type and value."""
+    df = spark.createDataFrame(
+        [(
+            dt.date(2024, 1, 2), "click", 2**40, 7, 3,
+            dt.datetime(2024, 1, 2, 9, 30, 1, 250000), dt.datetime(2024, 1, 2, 9, 31),
+            Decimal("1234567890.12"), [1, None, 3], b"\x00\xff", 0.1,
+        )],
+        "d date, s string, b bigint, i int, h smallint, ts timestamp, "
+        "ntz timestamp_ntz, m decimal(12,2), a array<int>, bin binary, x double",
+    )
+    store = str(tmp_path / "store")
+    commit_store(df, store, 0)
+    got = read_store(spark, store)
+    assert got.schema.simpleString() == df.schema.simpleString()
+    assert got.collect() == df.collect()
+
+
 def test_fold_replay_runs_no_spark_job(spark, tmp_path):
     """The pointer is the high-water mark: a replayed batch id is skipped
     without running a single Spark job — also against a committed EMPTY
@@ -91,19 +131,11 @@ def test_fold_replay_runs_no_spark_job(spark, tmp_path):
 
     batch = spark.createDataFrame([(1,)], "k int")
     sc = spark.sparkContext
-    replay, fresh = f"replay-{uuid.uuid4().hex}", f"fresh-{uuid.uuid4().hex}"
-    try:
-        sc.setJobGroup(replay, "replayed fold step")
-        fold_batch(spark, store, merge, batch, 0)
-        sc.setJobGroup(fresh, "new fold step")
-        fold_batch(spark, store, merge, batch, 1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    assert list(tracker.getJobIdsForGroup(replay)) == []
-    assert len(merged) == 1
+    assert _jobs(sc, lambda: fold_batch(spark, store, merge, batch, 0)) == 0
+    assert merged == []
     # the job group does capture the fold step's jobs when it merges
-    assert len(tracker.getJobIdsForGroup(fresh)) > 0
+    assert _jobs(sc, lambda: fold_batch(spark, store, merge, batch, 1)) > 0
+    assert len(merged) == 1
     assert committed_batch(store) == 1
     assert [r["k"] for r in read_store(spark, store).collect()] == [1]
 
@@ -120,16 +152,21 @@ def test_versioned_store_crash_semantics(spark, tmp_path):
     commit_store(df1, store, 0)
     assert [(r["k"], r["v"]) for r in read_store(spark, store).collect()] == [(1, 10)]
 
-    # (a) crash BEFORE pointer swap: new version dir written, pointer old
-    spark.createDataFrame([(9, 99)], "k int, v int").write.parquet(
+    # (a) crash BEFORE pointer swap: new version dir written (several
+    # part files), pointer old
+    spark.createDataFrame([(9, 99), (8, 88)], "k int, v int").repartition(2).write.parquet(
         f"{store}/_v_000000000001"
     )
+    assert len([n for n in os.listdir(f"{store}/_v_000000000001") if n.startswith("part-")]) >= 2
     assert [(r["k"], r["v"]) for r in read_store(spark, store).collect()] == [(1, 10)]
     assert committed_batch(store) == 0
-    # a real commit for the same id then supersedes the debris cleanly
+    # a real commit for the same id then supersedes the debris cleanly:
+    # no stale part file survives, and no temp file is left behind
     commit_store(df1.withColumn("v", F.lit(20)), store, 1)
     assert [(r["k"], r["v"]) for r in read_store(spark, store).collect()] == [(1, 20)]
     assert not os.path.exists(f"{store}/_v_000000000000")  # GC'd after swap
+    for d in (store, f"{store}/_v_000000000001"):
+        assert not [n for n in os.listdir(d) if n.startswith(".")], d
 
     # (b) orphan debris, no pointer ever written -> bootstrap (None)
     store2 = str(tmp_path / "store2")
