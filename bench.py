@@ -18,6 +18,12 @@ own cost. `_build:alpha + alpha101_a` is the number comparable with
 rounds that billed the alpha build to `alpha101_a`. BENCH_DETAIL.json is
 written only by full-suite runs (no query names on the command line).
 
+BENCH_DETAIL.json also holds, under `layers`, each query entry's codegen
+(`codegen_s` compiling, `compiles` classes: JVM-wide deltas) and the
+`jobs`, `stages` and `tasks` it ran (its own job group, read from the
+status tracker: no UI, no port). A consumer's layers include the shared
+builds it triggered; `_build:*` entries carry no layer record.
+
 A run is `quiet` when the CPU time other processes used while it ran
 (`external_cpu_s`: host busy time minus this process tree's, from /proc)
 stays under a quarter of the host's cores over the run's wall time.
@@ -29,8 +35,10 @@ import json
 import os
 import sys
 import time
+import uuid
 
 from perfbench.hostcpu import CpuWindow
+from perfbench.spans import JvmCounters
 from quantitative_database_and_visualization_platform_spark.plans import QUERIES
 from quantitative_database_and_visualization_platform_spark.session import (
     get_spark,
@@ -52,6 +60,34 @@ def _sf_of(sf_dir: str) -> float:
 def _execute(df) -> None:
     # noop sink: full execution of the plan without collecting to driver
     df.write.format("noop").mode("overwrite").save()
+
+
+def run_entry(spark, name: str, sf_dir: str) -> tuple[float, dict]:
+    """Run registered query `name` to completion; return its wall seconds
+    and its layers (see the module docstring). Managed caches are
+    released afterwards, also when the query raises."""
+    sc, counters = spark.sparkContext, JvmCounters(spark)
+    group = f"bench-{name}-{uuid.uuid4().hex[:8]}"
+    cg0, n0 = counters.codegen()
+    sc.setJobGroup(group, name)
+    t0 = time.perf_counter()
+    try:
+        _execute(QUERIES[name](spark, sf_dir))
+        wall = time.perf_counter() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        # drop per-query managed caches so a 55-query session does not
+        # accumulate cached blocks (the shared tables are exempt)
+        release_managed()
+    cg1, n1 = counters.codegen()
+    jobs, stages, tasks = counters.job_stats(group)
+    return wall, {
+        "codegen_s": round(cg1 - cg0, 3),
+        "compiles": n1 - n0,
+        "jobs": jobs,
+        "stages": stages,
+        "tasks": tasks,
+    }
 
 
 def _load_1m() -> float:
@@ -82,19 +118,14 @@ def main() -> None:
     take_builds()  # the warmup's table loads are not billed to anyone
 
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     builds: dict[str, float] = {}
     for name in names:
-        t0 = time.perf_counter()
         try:
-            _execute(QUERIES[name](spark, sf_dir))
-            wall = time.perf_counter() - t0
+            wall, layers[name] = run_entry(spark, name, sf_dir)
         except Exception as exc:  # noqa: BLE001 — a broken query must not kill the bench
             print(f"# bench error in {name}: {type(exc).__name__}: {exc}", file=sys.stderr)
             wall = None
-        finally:
-            # drop per-query managed caches so a 55-query session does not
-            # accumulate cached blocks (the shared tables are exempt)
-            release_managed()
         built = take_builds()
         for table, secs in built:
             builds[table] = builds.get(table, 0.0) + secs
@@ -118,6 +149,7 @@ def main() -> None:
         "load_1m_end": load_end,
         "external_cpu_s": host["external_cpu_s"],
         "quiet": quiet,
+        "layers": layers,
     }
     # Full per-query detail goes to a repo file; the stdout line must stay
     # UNDER ~2000 bytes because the round driver keeps only the last 2000
