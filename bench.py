@@ -18,7 +18,11 @@ own cost. `_build:alpha + alpha101_a` is the number comparable with
 rounds that billed the alpha build to `alpha101_a`. BENCH_DETAIL.json is
 written only by full-suite runs (no query names on the command line).
 
-BENCH_DETAIL.json also holds, under `layers`, each query entry's codegen
+BENCH_DETAIL.json also holds, under `layers`, each query entry's
+construction (`construct_s`: the wall time of the `QUERIES[name](spark,
+sf_dir)` call, including any shared build it triggered; in a one-pass
+suite every call but the warmup query's runs its builder, since a
+registered query keeps its plan only after its first call), its codegen
 (`codegen_s` compiling, `compiles` classes: JVM-wide deltas) and the
 `jobs`, `stages` and `tasks` it ran (its own job group, read from the
 status tracker: no UI, no port). A consumer's layers include the shared
@@ -72,7 +76,9 @@ def run_entry(spark, name: str, sf_dir: str) -> tuple[float, dict]:
     sc.setJobGroup(group, name)
     t0 = time.perf_counter()
     try:
-        _execute(QUERIES[name](spark, sf_dir))
+        df = QUERIES[name](spark, sf_dir)
+        construct = time.perf_counter() - t0
+        _execute(df)
         wall = time.perf_counter() - t0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -82,6 +88,7 @@ def run_entry(spark, name: str, sf_dir: str) -> tuple[float, dict]:
     cg1, n1 = counters.codegen()
     jobs, stages, tasks = counters.job_stats(group)
     return wall, {
+        "construct_s": round(construct, 3),
         "codegen_s": round(cg1 - cg0, 3),
         "compiles": n1 - n0,
         "jobs": jobs,

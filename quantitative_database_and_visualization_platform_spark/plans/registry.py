@@ -16,14 +16,23 @@ against DuckDB is exact, not approximate):
 - **LIMIT queries** always ORDER BY a unique key suffix.
 - **Counts** are CAST to BIGINT in the oracle (DuckDB count_if/sum(int)
   widen to HUGEINT otherwise).
+
+Every registered query is a *prepared entry* (`_prepared`): the Python
+builder runs once per session and input signature, and warm calls wrap
+the kept analyzed plan in a new DataFrame. The module-level builder
+functions stay unwrapped; ``QUERIES[name].__wrapped__`` is the builder.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import context_key, managed_count
+from ..sources.catalog import SHARED_TABLES, TABLES, path_sig, table_path
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -42,12 +51,81 @@ def query(name: str, oracle: str | None = None):
                 f"duplicate query registration: {name!r} "
                 f"(already registered by {QUERIES[name].__module__})"
             )
-        QUERIES[name] = fn
+        QUERIES[name] = _prepared(name, fn)
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
 
     return deco
+
+
+def _prepared(name: str, build: Callable[[SparkSession, str], DataFrame]):
+    """`build` as a prepared entry.
+
+    Building a query's DataFrame is ~200 py4j round trips with eager
+    analysis (0.08-0.19 s for the query_mix queries), about a third of a
+    warm query's wall time, and a long-lived session sends the same
+    queries again and again. The first construction in a session that
+    runs no Spark job and registers no `managed_persist` keeps its
+    analyzed plan in `SHARED_TABLES` under
+    ``(context_key, "prepared", name, sf_dir)``; a later call from the
+    same SparkSession object whose signature still matches returns
+    ``Dataset.ofRows`` over that plan without running `build`.
+
+    The signature is the `path_sig` of `sf_dir`'s listing and of every
+    `TABLES` file in it, plus the session's SQL conf (analysis fixes the
+    time zone, ANSI mode and other settings into the plan). A hit skips
+    only construction and analysis: it gets its own QueryExecution, so
+    Catalyst optimizes and plans it, AQE adapts it and it scans parquet.
+    A construction that ran a job (a shared-table build, an eager
+    checkpoint, a collect to a literal) is never kept, because its plan
+    holds data the next call must derive again; nor is one that
+    registered a managed cache, which the caller releases after the
+    query. Python-side state a builder reads (a module constant) is not
+    in the signature: the builder itself is ``QUERIES[name].__wrapped__``.
+
+    Every hit adds its Dataset id to the id set Spark's self-join check
+    tags on the kept plan's root, one boxed long per call; giving each
+    hit a fresh root would cost an analysis again (about 3 ms, against
+    0.2-0.5 ms for the hit).
+    """
+
+    @functools.wraps(build)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        key = (context_key(spark), "prepared", name, sf_dir)
+        sig = _signature(spark, sf_dir)
+        hit = SHARED_TABLES.get(key)
+        if hit is not None:
+            kept_sig, (owner, replay) = hit
+            if kept_sig == sig and owner is spark:
+                return DataFrame(replay(), spark)
+        jobs, persists = _jobs_started(spark), managed_count()
+        df = build(spark, sf_dir)
+        if jobs is not None and jobs == _jobs_started(spark) and persists == managed_count():
+            of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+            plan = df._jdf.queryExecution().analyzed()
+            SHARED_TABLES[key] = (sig, (spark, functools.partial(of_rows, spark._jsparkSession, plan)))
+        return df
+
+    return run
+
+
+def _signature(spark: SparkSession, sf_dir: str) -> tuple:
+    """What a prepared plan depends on besides the builder's code: the
+    input files (and any file added next to them, such as a precomputed
+    summary a builder looks for) and the session's SQL conf."""
+    files = (sf_dir, *(table_path(sf_dir, t) for t in TABLES))
+    conf = spark._jsparkSession.sessionState().conf().getAllConfs().toString()
+    return tuple(path_sig(p) for p in files), conf
+
+
+def _jobs_started(spark: SparkSession) -> int | None:
+    """Spark jobs submitted in this context so far, or None when the
+    counter cannot be read."""
+    try:
+        return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+    except Exception:  # noqa: BLE001 — unreadable counter: keep nothing
+        return None
 
 
 # --- Spark-side determinism helpers ---

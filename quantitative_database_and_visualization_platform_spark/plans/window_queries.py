@@ -22,7 +22,7 @@ from pyspark.sql import Window
 from ..factors.panel import O_BARS, bars_table
 from ..operators import timeseries as ts
 from ..sources.catalog import load_table
-from .registry import query
+from .registry import o_round6, query, round6
 
 _W_SQL = "PARTITION BY user_id ORDER BY ts, event_id"
 
@@ -154,19 +154,28 @@ def ts_rank_argmax_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cumulative ops: cumsum (Cumulative_IC, `pages/5_Alpha lab.py:108`) and
 # cumprod equity curve via exp(sum(log)) (`pages/6_Sector rotation.py:154`),
 # plus normalize-to-first (`pages/1_Market overview.py:81`).
+# Both float outputs go through round6/o_round6, not ROUND: 9.51/19.2 - 1
+# is -0.5046875 in shortest form, which Spark's ROUND takes half-up to
+# -0.504688 while DuckDB's, working on the raw double
+# (-504687.49999999994 after the scaling), gives -0.504687.
 # ---------------------------------------------------------------------------
 @query(
     "cumulative_ops",
     oracle=f"""
-    SELECT event_id, user_id,
-           SUM(CAST(ROUND(value*100,0) AS BIGINT))
-               OVER ({_W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)/100.0 AS cum_value,
-           ROUND(EXP(SUM(LN(1 + value/10000))
-               OVER ({_W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6) AS equity_curve,
-           ROUND(value / (FIRST_VALUE(value)
-               OVER ({_W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) - 1, 6) AS norm_to_first
-    FROM events
-    WHERE value IS NOT NULL
+    SELECT event_id, user_id, cum_value,
+           {o_round6('equity')} AS equity_curve,
+           {o_round6('norm')} AS norm_to_first
+    FROM (
+        SELECT event_id, user_id,
+               SUM(CAST(ROUND(value*100,0) AS BIGINT))
+                   OVER ({_W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)/100.0 AS cum_value,
+               EXP(SUM(LN(1 + value/10000))
+                   OVER ({_W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS equity,
+               value / (FIRST_VALUE(value)
+                   OVER ({_W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) - 1 AS norm
+        FROM events
+        WHERE value IS NOT NULL
+    )
     """,
 )
 def cumulative_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -177,12 +186,21 @@ def cumulative_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir).filter(F.col("value").isNotNull())
     w = _w()
     cum = ts.cumulative(w)
-    return ev.select(
+    # raw window outputs first, rounded by name (round6 references its
+    # argument several times, which would plan the window tree again)
+    raw = ev.select(
         "event_id",
         "user_id",
         (F.sum(_cents()).over(cum) / 100.0).alias("cum_value"),
-        F.round(ts.cum_prod(1 + F.col("value") / 10000, w), 6).alias("equity_curve"),
-        F.round(ts.normalize_to_first("value", w), 6).alias("norm_to_first"),
+        ts.cum_prod(1 + F.col("value") / 10000, w).alias("equity"),
+        ts.normalize_to_first("value", w).alias("norm"),
+    )
+    return raw.select(
+        "event_id",
+        "user_id",
+        "cum_value",
+        round6("equity").alias("equity_curve"),
+        round6("norm").alias("norm_to_first"),
     )
 
 

@@ -156,6 +156,11 @@ def managed_persist(df):
     return df
 
 
+def managed_count() -> int:
+    """How many managed caches are registered and not yet released."""
+    return len(_MANAGED)
+
+
 def release_managed() -> None:
     while _MANAGED:
         try:

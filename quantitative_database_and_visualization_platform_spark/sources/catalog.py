@@ -83,6 +83,10 @@ def table_path(sf_dir: str, name: str) -> str:
 # in-memory tables): a production run writes them to parquet, the bench
 # session keeps them as in-memory leaves built inside the first
 # consumer's timed region and never persisted across runs.
+# Prepared query plans (plans.registry._prepared) live here too, under
+# (session, "prepared", query name, sf_dir), stamped with the input and
+# SQL-conf signature; they are written directly, not through `shared`,
+# so they never appear in the build log.
 SHARED_TABLES: dict[tuple, tuple[tuple, object]] = {}
 
 # (key[0], exclusive build seconds) per build, in build order; harnesses

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -52,6 +53,31 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("qdvp-tests", shuffle_partitions=8)
     yield s
+
+
+@contextlib.contextmanager
+def throwaway_query(build, name: str = "_throwaway_query"):
+    """Register `build` as query `name` for the block. Yields the
+    registered (prepared) entry and the list of sf_dirs the builder ran
+    for; afterwards the query and its kept plans are gone."""
+    from quantitative_database_and_visualization_platform_spark.plans import QUERIES, query
+    from quantitative_database_and_visualization_platform_spark.sources.catalog import (
+        SHARED_TABLES,
+    )
+
+    builds: list[str] = []
+
+    def counted(spark, sf_dir):
+        builds.append(sf_dir)
+        return build(spark, sf_dir)
+
+    query(name)(counted)
+    try:
+        yield QUERIES[name], builds
+    finally:
+        del QUERIES[name]
+        for key in [k for k in SHARED_TABLES if k[1:3] == ("prepared", name)]:
+            del SHARED_TABLES[key]
 
 
 def pytest_sessionfinish(session, exitstatus):

@@ -1,5 +1,5 @@
-"""bench.py's per-entry layer record: codegen deltas and the Spark jobs,
-stages and tasks of the entry's own job group."""
+"""bench.py's per-entry layer record: construction time, codegen deltas
+and the Spark jobs, stages and tasks of the entry's own job group."""
 
 from __future__ import annotations
 
@@ -13,7 +13,8 @@ def test_run_entry_records_layers(spark):
     runs = [bench.run_entry(spark, "point_lookup", SF) for _ in range(3)]
     for wall, layers in runs:
         assert wall > 0
-        assert set(layers) == {"codegen_s", "compiles", "jobs", "stages", "tasks"}
+        assert set(layers) == {"construct_s", "codegen_s", "compiles", "jobs", "stages", "tasks"}
+        assert 0 <= layers["construct_s"] <= wall
         assert layers["tasks"] >= layers["stages"] >= layers["jobs"] >= 1
         assert layers["codegen_s"] >= 0
     # each entry counts only its own jobs, and a re-run reuses the

@@ -26,6 +26,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -35,6 +37,7 @@ from quantitative_database_and_visualization_platform_spark.factors.panel import
     daily_bars,
 )
 from quantitative_database_and_visualization_platform_spark.plans import (
+    QUERIES,
     alpha_queries as aq,
     backtest_queries as bq,
     pipeline_queries as pq,
@@ -44,6 +47,8 @@ from quantitative_database_and_visualization_platform_spark.sources.catalog impo
     shared,
     take_builds,
 )
+
+from conftest import throwaway_query
 
 SF = "/root/testdata/sf0.001"
 
@@ -195,6 +200,17 @@ def test_shingles_table_memoizes_and_matches_raw(spark):
     assert got.count() == want.count() > 0
 
 
+PREPARED = "_prepared_events"
+
+
+def _prepared_rows(spark, sf):
+    """Rows of the throwaway prepared query over events, read on a warm
+    call: a cold one may run load_table's schema job, which keeps no plan."""
+    run = QUERIES[PREPARED]
+    run(spark, sf)
+    return run(spark, sf).count()
+
+
 # shared table -> (input it declares, the size of the value it serves)
 SHARED_CASES = {
     "load_table": ("events", lambda s, sf: load_table(s, sf, "events").count()),
@@ -205,6 +221,7 @@ SHARED_CASES = {
     "n_docs": ("documents", pq._n_docs),
     "n_vecs": ("embeddings", pq._n_vecs),
     "n_codes": ("events", bq._n_codes),
+    "prepared": ("events", _prepared_rows),
     "alpha": ("events", lambda s, sf: aq._alpha_table(s, sf).count()),
     # the IC table is one row per factor either way; days with an IC shrink
     "ic": ("events", lambda s, sf: aq._ic_table(s, sf).agg(F.sum("n_days")).first()[0]),
@@ -229,18 +246,27 @@ def test_shared_table_invalidates_on_rewrite(spark, tmp_path, name):
     table, size = SHARED_CASES[name]
     sf, src = str(tmp_path), f"{SF}/{table}.parquet"
     con = duckdb.connect()
-    try:
-        con.execute(
-            f"COPY (SELECT * FROM read_parquet('{src}')) TO '{sf}/{table}.parquet' (FORMAT PARQUET)"
-        )
-        before = size(spark, sf)
-        con.execute(
-            f"COPY (SELECT * FROM read_parquet('{src}') ORDER BY {_ENTITY_KEY[table]}"
-            f" LIMIT 50) TO '{sf}/{table}.parquet' (FORMAT PARQUET)"
-        )
-        after = size(spark, sf)
-    finally:
-        con.close()
+    prepared = (
+        throwaway_query(lambda s, d: load_table(s, d, "events").select("user_id"), PREPARED)
+        if name == "prepared"
+        else contextlib.nullcontext((None, []))
+    )
+    with prepared as (_, builds):
+        try:
+            con.execute(
+                f"COPY (SELECT * FROM read_parquet('{src}')) TO '{sf}/{table}.parquet' (FORMAT PARQUET)"
+            )
+            before = size(spark, sf)
+            built_before = len(builds)
+            con.execute(
+                f"COPY (SELECT * FROM read_parquet('{src}') ORDER BY {_ENTITY_KEY[table]}"
+                f" LIMIT 50) TO '{sf}/{table}.parquet' (FORMAT PARQUET)"
+            )
+            after = size(spark, sf)
+        finally:
+            con.close()
+        if name == "prepared":
+            assert len(builds) > built_before, "the builder did not run after the rewrite"
     assert after < before, f"{name} served its pre-rewrite value"
 
 

@@ -187,3 +187,43 @@ def test_hostile_session_parity(spark):
         odf = run_oracle(SF_TEST, osql[name])
         problems = compare(sdf, odf)
         assert not problems, f"{name} under hostile session: " + "; ".join(problems)
+
+
+def test_cumulative_ops_rounds_the_half_way_ratio_alike(spark, tmp_path):
+    """9.51 / 19.2 - 1 is -0.5046875 in shortest form: Spark's ROUND took
+    it half-up to -0.504688 and DuckDB's ROUND to -0.504687 (one row of
+    the perfbench generator's BASE_SEED=4 events). Both sides now round
+    through round6/o_round6."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quantitative_database_and_visualization_platform_spark.plans.oracle_check import (
+        compare,
+    )
+
+    t0 = datetime.datetime(2024, 1, 1, 4, 46, 25)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([64, 8312], pa.int64()),
+            "ts": pa.array([t0, t0 + datetime.timedelta(days=24)], pa.timestamp("us")),
+            "user_id": pa.array([49, 49], pa.int64()),
+            "event_type": pa.array(["view", "error"], pa.string()),
+            "value": pa.array([19.2, 9.51], pa.float64()),
+            "props": pa.array(['{"k": 1}', '{"k": 77}'], pa.string()),
+        }),
+        tmp_path / "events.parquet",
+    )
+    sf = str(tmp_path)
+    got = QUERIES["cumulative_ops"](spark, sf).toArrow()
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf}/events.parquet')")
+        want = con.execute(ORACLES["cumulative_ops"]).arrow()
+    finally:
+        con.close()
+    assert not compare(got, want)
+    norm = dict(zip(got.column("event_id").to_pylist(), got.column("norm_to_first").to_pylist()))
+    assert norm == {64: 0.0, 8312: -0.504687}
