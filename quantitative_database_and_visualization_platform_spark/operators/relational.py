@@ -365,6 +365,7 @@ def global_ntile(
     # rows). Persisting pins ONE materialized partitioning for both.
     from ..session import managed_persist
 
+    # correctness pin: both branches read ONE materialized partitioning
     withpid = managed_persist(
         ranged.withColumn("__gnt_pid", F.spark_partition_id())
     )

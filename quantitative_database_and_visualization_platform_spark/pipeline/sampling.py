@@ -18,10 +18,11 @@ order convention); the pre-filter thresholds the numeric value of the
 first 13 hex digits, which is order-consistent with the string order —
 every row ordered before a surviving row also survives — so the two
 phases return BIT-IDENTICAL rows to the one-phase form whenever every
-group keeps >= min(quota, group_count) survivors. That containment is CHECKED (one tiny aggregate): groups
-that undershoot (probability ~ exp(-quota*(s-1)^2/(2s)) per group —
-~1e-10 at quota=128, s=2) are re-ranked in full as a fallback, so the
-result is always exact, never approximate. Determinism: pure md5 order,
+group keeps >= min(quota, group_count) survivors. That containment is
+CHECKED in the plan (one tiny broadcast aggregate): groups that
+undershoot (probability ~ exp(-quota*(s-1)^2/(2s)) per group — ~1e-10
+at quota=128, s=2) are re-ranked in full as a fallback, so the result
+is always exact, never approximate. Determinism: pure md5 order,
 no RNG state, reshuffle-stable.
 """
 
@@ -68,21 +69,18 @@ def two_phase_quota_pick(
     # survivor set is empty has no survivor-side row and would otherwise
     # escape the audit entirely
     sc = survivors.groupBy(group).agg(F.count(F.lit(1)).alias("__sc"))
-    audit = (
+    short = (
         counts.join(sc, group, "left")
-        .withColumn("__need", F.least(quota_col, F.col("__gc")))
-        .filter(F.coalesce("__sc", F.lit(0)) < F.col("__need"))
+        .filter(F.coalesce("__sc", F.lit(0)) < F.least(quota_col, F.col("__gc")))
+        .select(group, F.lit(True).alias("__short"))
     )
-    short = [r[group] for r in audit.collect()]  # ~never non-empty
-    if short:
-        # fallback: full exact rank for the undershooting groups only —
-        # REPLACE those groups' prefix with the whole group (a superset)
-        # instead of union+dropDuplicates, which would collapse
-        # legitimately duplicate (group, key) rows the one-phase window
-        # form keeps (r6 ADVICE)
-        survivors = survivors.filter(~F.col(group).isin(short)).unionByName(
-            with_h.filter(F.col(group).isin(short))
-        )
+    # fallback, in-plan (no driver collect): an undershooting group keeps
+    # its WHOLE group (a superset) for the exact rank; a filter, not
+    # union+dropDuplicates, which would collapse legitimately duplicate
+    # (group, key) rows the one-phase window form keeps (r6 ADVICE)
+    survivors = with_h.join(F.broadcast(short), group, "left").filter(
+        (F.col("__h") < thresh) | F.col("__short").isNotNull()
+    )
 
     w = Window.partitionBy(group).orderBy(
         F.md5(F.col(key).cast("string")), key
@@ -90,5 +88,5 @@ def two_phase_quota_pick(
     return (
         survivors.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= quota_col)
-        .drop("__h", "__gc", "__rn")
+        .drop("__h", "__gc", "__short", "__rn")
     )

@@ -130,23 +130,19 @@ def length_quality_filter(
 def chunk_tokens(df: DataFrame, chunk: int = 64, stride: int = 48) -> DataFrame:
     """One row per overlapping token chunk of the normalized text:
     (input columns minus text) + chunk_id / start_tok / n_tok /
-    chunk_hash. Shuffle-free map work: the token array is persisted as a
-    stored attribute before the per-row sequence explode (the Generate
-    collapse trap), chunks start at stride multiples, and only the FINAL
-    chunk may be shorter than `chunk`: the sequence stops at the last k
-    that still covers a new token (k_max = ceil((n - chunk) / stride),
-    floored at 0), so with chunk > stride no emitted chunk is a suffix
-    subset of its predecessor (r6 ADVICE — the old (n-1) div stride
-    bound emitted fully-redundant clamped tails)."""
-    from ..session import managed_persist
-
+    chunk_hash. Shuffle-free map work: chunks start at stride multiples,
+    and only the FINAL chunk may be shorter than `chunk`: the sequence
+    stops at the last k that still covers a new token (k_max =
+    ceil((n - chunk) / stride), floored at 0), so with chunk > stride no
+    emitted chunk is a suffix subset of its predecessor (r6 ADVICE — the
+    old (n-1) div stride bound emitted fully-redundant clamped tails)."""
     # a bodyless doc has no chunks: without the filter Spark's
     # size(NULL) = -1 still emits one k=0 chunk whose hash is md5('') —
     # a constant that equijoins EVERY bodyless doc with every other in
     # chunk-level dedup (1711 phantom pairs at sf0.001; r13
     # NULL-saturated sweep). Callers' oracles carry the matching
     # `WHERE t IS NOT NULL`. No-op on clean data.
-    wdf = managed_persist(
+    wdf = (
         df.filter(F.col("text").isNotNull())
         .withColumn("__w", F.split(normalized_text("text"), " "))
         .drop("text")

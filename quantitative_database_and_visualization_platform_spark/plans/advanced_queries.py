@@ -1959,19 +1959,14 @@ def order_priority_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def nation_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import managed_persist
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    # persist the distinct edge set (≤ nation² rows): it feeds FIVE
-    # consumers (e1/e2/e3 of the triangle join + both sides of deg), and
-    # without the barrier each consumer re-planned the fact-sized
-    # lineitem⋈orders derivation — the r12 plan held 14 SortMergeJoins,
-    # i.e. the full fact shuffle ran ~5× for a ≤300-row relation (r13
-    # optimization round, guide §5 caching / §7.2 duplicated subtrees).
-    e = managed_persist(
+    # the distinct edge set (≤ nation² rows) feeds FIVE consumers
+    # (e1/e2/e3 of the triangle join + both sides of deg); Spark reuses
+    # its one fact-sized derivation's exchanges across them
+    e = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -2370,7 +2365,7 @@ def window_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ever dropped or mis-seeded carried state, n_single_pass_match (and
 # the level histogram itself) would diverge and the hash would flip.
 #
-# Scale shape: one persisted chain-event scan feeding three user-keyed
+# Scale shape: one chain-event scan feeding three user-keyed
 # aggregations and one broadcast 1-row boundary; state is 3 BIGINTs per
 # user (identical to the streaming operator); output is a ≤4-row
 # histogram.
@@ -2424,25 +2419,21 @@ def window_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import managed_persist
-
     ev = load_table(spark, sf_dir, "events")
     lvl = (
         F.when(F.col("event_type") == "signup", 1)
         .when(F.col("event_type") == "click", 2)
         .when(F.col("event_type") == "purchase", 3)
     )
-    # one persisted chain-event relation feeds the boundary scalar and
+    # one chain-event relation feeds the boundary scalar and
     # all three folds (sub-microsecond parts are zero in this corpus, so
     # the micros cast is value-preserving vs the oracle's epoch_us)
-    chain = managed_persist(
-        ev.select(
-            "user_id",
-            F.expr("unix_micros(CAST(ts AS TIMESTAMP))").alias("t"),
-            "event_id",
-            lvl.alias("lvl"),
-        ).filter(F.col("lvl").isNotNull())
-    )
+    chain = ev.select(
+        "user_id",
+        F.expr("unix_micros(CAST(ts AS TIMESTAMP))").alias("t"),
+        "event_id",
+        lvl.alias("lvl"),
+    ).filter(F.col("lvl").isNotNull())
     bounds = chain.agg(F.min("t").alias("mn"), F.max("t").alias("mx")).select(
         F.expr("(mn + mx) DIV 2").alias("boundary")
     )
@@ -2491,7 +2482,7 @@ def streaming_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list("e")).alias("es"))
         .select("user_id", F.expr(_wf_level(_wf_fold("es"))).alias("single_level"))
     )
-    # merge hint: Catalyst cannot size the post-persist collect_list
+    # merge hint: Catalyst cannot size the collect_list
     # aggregate behind `single` (user-cardinality — the estimate-blind
     # broadcast class the r9 100x audit fixed in the dedup family) and
     # plans a broadcast that is pure waste here anyway: both sides are

@@ -974,6 +974,22 @@ def vwap_slippage_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the ~date-count rows. A production pairs scan fans this out over
 # candidate pairs with the same per-pair plan.
 # ---------------------------------------------------------------------------
+def _pair_codes(spark: SparkSession, sf_dir: str) -> list:
+    """The first two codes of the bar panel, the pair the pair builders
+    trade: two scalars, not data-sized driver work, collected once per
+    session and events file so a warm call runs no job."""
+    bars = bars_table(spark, sf_dir)
+    return shared(
+        spark,
+        ("pair_codes", sf_dir),
+        (table_path(sf_dir, "events"),),
+        lambda: [
+            r["code"]
+            for r in bars.select("code").distinct().orderBy("code").limit(2).collect()
+        ],
+    )
+
+
 @query(
     "pairs_spread_zscore",
     oracle=f"""
@@ -1027,10 +1043,7 @@ def vwap_slippage_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pairs_spread_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = bars_table(spark, sf_dir)
-    two = [
-        r["code"]
-        for r in bars.select("code").distinct().orderBy("code").limit(2).collect()
-    ]  # two scalars, the pair definition — not data-sized driver work
+    two = _pair_codes(spark, sf_dir)
     if len(two) < 2:  # single-code panel: no pair exists — empty, like the oracle
         return spark.createDataFrame(
             [], "d date, beta double, spread double, zscore double"
@@ -1109,6 +1122,31 @@ def pairs_spread_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (one date-keyed shuffle over the panel, market-return table is
 # day-cardinality).
 # ---------------------------------------------------------------------------
+def _market_calendar(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]:
+    """The split builders' inputs: the equal-weight market return per
+    trading day (`mkt`), the trading days ranked from 0 (`days`: d, idx)
+    and their count. The count is a bounded driver scalar (calendar
+    size), taken once per session and events file, so a warm call runs
+    no job."""
+    bars = bars_table(spark, sf_dir)
+    w = Window.partitionBy("code").orderBy("d")
+    rets = bars.select(
+        "d", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
+    ).filter(F.col("ret").isNotNull())
+    micro = F.round(F.col("ret") * _RS, 0).cast("long")
+    mkt = rets.groupBy("d").agg(
+        (F.sum(micro) / F.count(F.lit(1)).cast("double") / _RS).alias("mkt_ret")
+    )
+    # calendar-bounded rank: one row per trading day
+    days = mkt.select("d").withColumn(
+        "idx", (F.row_number().over(Window.orderBy("d")) - 1).cast("long")
+    )
+    n_days = shared(
+        spark, ("n_ret_days", sf_dir), (table_path(sf_dir, "events"),), days.count
+    )
+    return mkt, days, n_days
+
+
 @query(
     "walkforward_splits",
     oracle=f"""
@@ -1156,20 +1194,7 @@ def pairs_spread_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def walkforward_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bars = bars_table(spark, sf_dir)
-    w = Window.partitionBy("code").orderBy("d")
-    rets = bars.select(
-        "d", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
-    ).filter(F.col("ret").isNotNull())
-    micro = F.round(F.col("ret") * _RS, 0).cast("long")
-    mkt = rets.groupBy("d").agg(
-        (F.sum(micro) / F.count(F.lit(1)).cast("double") / _RS).alias("mkt_ret")
-    )
-    # calendar-bounded rank: one row per trading day
-    days = mkt.select("d").withColumn(
-        "idx", F.row_number().over(Window.orderBy("d")) - 1
-    )
-    n_days = days.count()  # bounded driver scalar (calendar size)
+    mkt, days, n_days = _market_calendar(spark, sf_dir)
     n_splits = max(0, (n_days - 15) // 5 + 1)
     splits = spark.range(n_splits).select(F.col("id").alias("split_id"))
     legs = days.join(
@@ -1276,20 +1301,7 @@ def walkforward_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def purged_kfold_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bars = bars_table(spark, sf_dir)
-    w = Window.partitionBy("code").orderBy("d")
-    rets = bars.select(
-        "d", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
-    ).filter(F.col("ret").isNotNull())
-    micro = F.round(F.col("ret") * _RS, 0).cast("long")
-    mkt = rets.groupBy("d").agg(
-        (F.sum(micro) / F.count(F.lit(1)).cast("double") / _RS).alias("mkt_ret")
-    )
-    # calendar-bounded rank: one row per trading day
-    days = mkt.select("d").withColumn(
-        "idx", (F.row_number().over(Window.orderBy("d")) - 1).cast("long")
-    )
-    t = days.count()  # bounded driver scalar (calendar size)
+    mkt, days, t = _market_calendar(spark, sf_dir)
     k, embargo = 5, 2
     folds = spark.range(k).select(F.col("id").alias("fold_id"))
     # exact integer fold boundaries: lo(f) = ceil(f*T/K), hi(f) = lo(f+1)-1
@@ -1914,6 +1926,7 @@ def top_correlated_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bars = bars_table(spark, sf_dir)
     w = Window.partitionBy("code").orderBy("d")
+    # pays at sf0.1: warm wall without it 0.75x/1.26x (sf0.01/sf0.1)
     rets = managed_persist(
         bars.select(
             "code", "d", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
@@ -2068,15 +2081,11 @@ def _cand_pairs(
 def top_correlated_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked production twin of top_correlated_pairs — see the
     pair-domain blocking block comment above."""
-    from ..session import managed_persist
-
     bars = bars_table(spark, sf_dir)
     w = Window.partitionBy("code").orderBy("d")
-    rets = managed_persist(
-        bars.select(
-            "code", "d", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
-        ).filter(F.col("ret").isNotNull())
-    )
+    rets = bars.select(
+        "code", "d", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
+    ).filter(F.col("ret").isNotNull())
     cand = _cand_pairs(rets, _pair_blocks(spark, sf_dir), limit=15)
     return cand.select(
         F.col("ca").alias("code_a"),
@@ -3903,10 +3912,7 @@ def variance_ratio_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def leadlag_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = bars_table(spark, sf_dir)
-    two = [
-        r["code"]
-        for r in bars.select("code").distinct().orderBy("code").limit(2).collect()
-    ]  # two scalars, the pair definition — not data-sized driver work
+    two = _pair_codes(spark, sf_dir)
     if len(two) < 2:  # single-code panel: no pair exists — empty, like the oracle
         return spark.createDataFrame([], "lag int, n bigint, xcorr double")
     w = Window.partitionBy("code").orderBy("d")
@@ -5078,7 +5084,7 @@ def _coint_impl(
 ) -> DataFrame:
     from ..session import managed_persist
 
-    bars = managed_persist(bars_table(spark, sf_dir))
+    bars = bars_table(spark, sf_dir)
     w = Window.partitionBy("code").orderBy("d")
     rets = bars.select(
         "code", "d", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
@@ -5091,6 +5097,7 @@ def _coint_impl(
     y = lev.select(
         F.col("code").alias("cb_y"), F.col("d").alias("d_y"), F.col("lq").alias("yq")
     )
+    # pays at sf0.1: cointegration_screen warm wall without it 0.62x/1.39x (sf0.01/sf0.1)
     pp = managed_persist(
         x.join(F.broadcast(cand), "ca")
         .join(y, (F.col("cb") == F.col("cb_y")) & (F.col("d") == F.col("d_y")))
@@ -5985,15 +5992,11 @@ def granger_causality_screen_blocked(spark: SparkSession, sf_dir: str) -> DataFr
 def _granger_impl(
     spark: SparkSession, sf_dir: str, n_blocks: int | None
 ) -> DataFrame:
-    from ..session import managed_persist
-
-    bars = managed_persist(bars_table(spark, sf_dir))
+    bars = bars_table(spark, sf_dir)
     w = Window.partitionBy("code").orderBy("d")
-    rets = managed_persist(
-        bars.select(
-            "code", "d", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
-        ).filter(F.col("ret").isNotNull())
-    )
+    rets = bars.select(
+        "code", "d", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
+    ).filter(F.col("ret").isNotNull())
     cand = _cand_pairs(rets, n_blocks, limit=20, with_days=False)
     rqc = F.round(F.col("ret") * _FM_S, 0).cast("long")
     rq = rets.select("code", "d", rqc.alias("q"))
@@ -6376,21 +6379,13 @@ _O_RETS_MKT = f"""rets AS (
 def _rets_mkt_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of _O_RETS_MKT: (code, d, rq, mq) — the market leg is
     a day-keyed aggregate broadcast back onto the panel (bounded by the
-    calendar, so the broadcast is safe at any universe size). The rets
-    relation is persisted so the panel build (events scan → bar
-    aggregate → lag window) runs ONCE, not once per leg — without it
-    the plan re-derives the whole panel for the market aggregate (plan
-    audit, round 11: 8 exchanges → 5)."""
-    from ..session import managed_persist
-
+    calendar, so the broadcast is safe at any universe size)."""
     bars = bars_table(spark, sf_dir)
     w = Window.partitionBy("code").orderBy("d")
     rq = F.round((F.col("close") / F.lag("close").over(w) - 1) * _FM_S, 0).cast(
         "long"
     )
-    rets = managed_persist(
-        bars.select("code", "d", rq.alias("rq")).filter(F.col("rq").isNotNull())
-    )
+    rets = bars.select("code", "d", rq.alias("rq")).filter(F.col("rq").isNotNull())
     mkt = rets.groupBy("d").agg(
         F.floor(
             F.sum("rq").cast("double") / F.count(F.lit(1)) + F.lit(0.5)
@@ -7213,13 +7208,7 @@ def cusum_break_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     rq = F.round((F.col("close") / F.lag("close").over(w) - 1) * _FM_S, 0).cast(
         "long"
     )
-    from ..session import managed_persist
-
-    # persisted: the rets relation feeds both the running-sum pass and
-    # the per-code totals (one panel build, not two)
-    rets = managed_persist(
-        bars.select("code", "d", rq.alias("rq")).filter(F.col("rq").isNotNull())
-    )
+    rets = bars.select("code", "d", rq.alias("rq")).filter(F.col("rq").isNotNull())
     dec = lambda c: F.col(c).cast("decimal(38,0)")
     wc = w.rowsBetween(Window.unboundedPreceding, 0)
     c = rets.select(

@@ -235,10 +235,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   stop the re-collapse, a leaf does. r13: the leaf is the shared
     #   session table (_shingles_table) a production run checkpoints.
     shingled = _shingles_table(spark, sf_dir, distinct=False)
-    # sigs is consumed four times (band explode a/b, verify a/b) → persist
-    # the tiny signature table too (the in-memory form of the signature
-    # materialization a production run would write out).
-    sigs = managed_persist(dd.with_minhash_bands(shingled.select("doc_id", "shingles")))
+    sigs = dd.with_minhash_bands(shingled.select("doc_id", "shingles"))
     n = _n_docs(spark, sf_dir)
     cand = dd.lsh_candidate_pairs(sigs, n_docs=n)
     return dd.jaccard_verified_pairs(
@@ -332,11 +329,9 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same Generate-collapse discipline as dedup_minhash_lsh: the
         # shared shingle leaf is the barrier before any explode
         shingled = _shingles_table(spark, sf_dir).select("doc_id", "shingles")
-        pref = managed_persist(
-            dd.with_prefix(
-                dd.prefix_ordered_shingles(shingled, n_docs=_n_docs(spark, sf_dir)),
-                _NGRAM_T,
-            )
+        pref = dd.with_prefix(
+            dd.prefix_ordered_shingles(shingled, n_docs=_n_docs(spark, sf_dir)),
+            _NGRAM_T,
         )
         cand = dd.prefix_filter_candidates(
             pref, _NGRAM_T, n_docs=_n_docs(spark, sf_dir)
@@ -414,6 +409,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
     # persist: the block self-join consumes the signature table twice
+    # pays: warm wall without it 1.11x/1.16x (sf0.01/sf0.1)
     sigs = managed_persist(dd.with_simhash(docs))
     cand = dd.simhash_candidate_pairs(sigs, n_docs=_n_docs(spark, sf_dir))
     ham = dd.hamming("a_sig", "b_sig")
@@ -499,6 +495,7 @@ def dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
+    # pays: warm wall without it 1.02x/1.81x (sf0.01/sf0.1)
     sigs = managed_persist(dd.with_simhash(docs, bits=_WIDE_BITS))
     cand = dd.simhash_candidate_pairs(
         sigs, bits=_WIDE_BITS, n_docs=_n_docs(spark, sf_dir)
@@ -843,13 +840,11 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # persist: the bucket self-join consumes the bucketed table twice and
-    # the SRP bucket computation is planes x 64 interpreted lambda ops/row
-    bucketed = managed_persist(emb.select(
+    bucketed = emb.select(
         "vec_id",
         "embedding",
         srp_bucket("embedding", n_planes=planes_for_corpus(n)).alias("bucket"),
-    ))
+    )
     a = bucketed.select(
         F.col("vec_id").alias("a_id"), F.col("embedding").alias("ea"), "bucket"
     )
@@ -863,6 +858,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drop the arrays the moment the cosine is computed: the pair
     # relation is Σ bucket²-sized and is consumed twice (threshold +
     # final filter)
+    # pays: warm wall without it 2.4x/3.0x (sf0.01/sf0.1)
     pairs = managed_persist(
         a.join(b, ["bucket"])
         .filter(F.col("a_id") < F.col("b_id"))
@@ -1173,8 +1169,12 @@ def stratified_sample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.sampling import two_phase_quota_pick
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    m_row = (
-        docs.groupBy("lang").count().agg(F.min("count").alias("__m")).collect()[0][0]
+    # collected once per session and documents file: a warm call runs no job
+    m_row = shared(
+        spark,
+        ("min_stratum", sf_dir),
+        (table_path(sf_dir, "documents"),),
+        lambda: docs.groupBy("lang").count().agg(F.min("count")).collect()[0][0],
     )
     if m_row is None:  # empty corpus: no stratum exists — empty, like the oracle
         return spark.createDataFrame([], "doc_id long, lang string")
@@ -1245,6 +1245,7 @@ def repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array().cast("array<string>")
         )
 
+    # pays: warm wall without it 3.3x/12.6x (sf0.01/sf0.1)
     grams = managed_persist(
         docs.select(
             "doc_id", F.split(dd.normalized_text("text"), " ").alias("__w")
@@ -1517,11 +1518,9 @@ _CONT_T = 0.8
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = _shingles_table(spark, sf_dir).select("doc_id", "shingles")
-    pref = managed_persist(
-        dd.with_prefix(
-            dd.prefix_ordered_shingles(shingled, n_docs=_n_docs(spark, sf_dir)),
-            _CONT_T,
-        )
+    pref = dd.with_prefix(
+        dd.prefix_ordered_shingles(shingled, n_docs=_n_docs(spark, sf_dir)),
+        _CONT_T,
     )
     n = _n_docs(spark, sf_dir)
     big = n > dd.BROADCAST_SAFE_DOCS
@@ -1623,6 +1622,7 @@ def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection per emitted element (O(len²)/doc — measured 25 s vs
     # ~2 s at sf0.1); exploding from the cached leaf is linear, and both
     # consumers (frequency count, per-doc rollup) read the same cache
+    # pays: warm wall without it 7.8x/27.3x (sf0.01/sf0.1)
     sh = managed_persist(
         dd.with_shingles(docs, k=_ESD_K).select("doc_id", "shingles")
     )
@@ -1738,6 +1738,7 @@ def repeated_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here because the rollup consumes it three times (sizes + both join
     # sides)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # pays: warm wall without it 1.02x/1.10x (sf0.01/sf0.1)
     anch = managed_persist(dd.span_anchor_table(docs))
     return dd.span_pair_rollup(anch, n_docs=_n_docs(spark, sf_dir))
 
@@ -1795,6 +1796,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     feat = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long") % _DSIR_B
+    # pays at sf0.1: warm wall without it 0.96x/1.22x (sf0.01/sf0.1)
     toks = managed_persist(
         docs.repartition(spark.sparkContext.defaultParallelism)
         .select(
@@ -2015,6 +2017,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             " (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
         )
     )
+    # pays: warm wall without it 1.09x/1.16x (sf0.01/sf0.1)
     ad = managed_persist(
         a2.join(F.broadcast(cents.withColumnRenamed("__cid", "cid")), "cid")
         .withColumn(
@@ -2200,6 +2203,7 @@ def lm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode below generates from a stored attribute (the Generate
     # re-evaluation trap: exploding a computed array re-runs the
     # expression per emitted element)
+    # pays: warm wall without it 2.8x/9.0x (sf0.01/sf0.1)
     wdf = managed_persist(
         docs.withColumn("w", F.split(dd.normalized_text("text"), " ")).withColumn(
             "barr",
@@ -2348,6 +2352,7 @@ def doc_chunking_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     shd = _shingles_table(spark, sf_dir).select("source", "shingles")
+    # pays at sf0.01: warm wall without it 1.09x/0.89x (sf0.01/sf0.1)
     ss = managed_persist(
         shd.select("source", F.explode("shingles").alias("g")).distinct()
     )
@@ -2425,6 +2430,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def zipf_token_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("lang", "text")
+    # pays at sf0.1: warm wall without it 0.73x/1.18x (sf0.01/sf0.1)
     wdf = managed_persist(
         docs.select("lang", F.split(dd.normalized_text("text"), " ").alias("w"))
     )
@@ -2943,6 +2949,7 @@ def _o_minhash_audit() -> str:
 @query("minhash_accuracy_audit", oracle=_o_minhash_audit())
 def minhash_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = _shingles_table(spark, sf_dir).select("doc_id", "shingles")
+    # pays at sf0.1: warm wall without it 0.83x/1.08x (sf0.01/sf0.1)
     sigs = managed_persist(dd.with_minhash_bands(shingled))
     n = _n_docs(spark, sf_dir)
     cand = dd.lsh_candidate_pairs(sigs, n_docs=n)
@@ -3018,6 +3025,7 @@ def minhash_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("lang", "text")
+    # pays at sf0.1: warm wall without it 0.69x/1.23x (sf0.01/sf0.1)
     wdf = managed_persist(
         docs.select("lang", F.split(dd.normalized_text("text"), " ").alias("w"))
     )
@@ -3104,6 +3112,7 @@ def hll_distinct_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-expand leaf arrays cheaply; a persist of the full token stream
     # costs more than it saves (measured)
     toks = shingled.select("source", F.explode("shingles").alias("tok"))
+    # pays at sf0.1: warm wall without it 0.99x/1.09x (sf0.01/sf0.1)
     regs_src = managed_persist(sk.hll_registers(toks, "source", "tok"))
     merged = (
         regs_src.groupBy("register")
@@ -3205,7 +3214,7 @@ _O_SH5 = """
 def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = _shingles_table(spark, sf_dir, k=5)
     grams = shingled.select("doc_id", F.explode("shingles").alias("g"))
-    ev = managed_persist(grams.filter(F.col("doc_id") % 97 == 0).select("g").distinct())
+    ev = grams.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
     # the filter ships as an 8 KB bitmap LITERAL (collect bounded by
     # BLOOM_M, not the corpus) and the probe is a pure per-row
     # expression — no probe joins, no vocabulary shuffle; the only
@@ -3418,6 +3427,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .repartition(spark.sparkContext.defaultParallelism)
     )
+    # pays at sf0.1: warm wall without it 0.95x/1.18x (sf0.01/sf0.1)
     words = managed_persist(
         docs.select(
             "doc_id",
@@ -3604,7 +3614,7 @@ def hll_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         .select(F.to_date("ts").alias("d"), "user_id")
     )
-    regs_day = managed_persist(sk.hll_registers(ev, "d", "user_id"))
+    regs_day = sk.hll_registers(ev, "d", "user_id")
     days = ev.select("d").distinct()
     cum = (
         regs_day.alias("r")
@@ -3675,10 +3685,8 @@ def hll_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hll_rolling_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = managed_persist(
-        load_table(spark, sf_dir, "events").select(
-            F.to_date("ts").alias("d"), "user_id"
-        )
+    ev = load_table(spark, sf_dir, "events").select(
+        F.to_date("ts").alias("d"), "user_id"
     )
     regs_day = sk.hll_registers(ev, "d", "user_id")
     days = ev.select("d").distinct()
@@ -3928,9 +3936,7 @@ def neardup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("text")
-    words = managed_persist(
-        docs.select(F.split(dd.normalized_text("text"), " ").alias("w"))
-    )
+    words = docs.select(F.split(dd.normalized_text("text"), " ").alias("w"))
     pairs = words.select(
         F.explode(
             F.expr(
@@ -4076,9 +4082,7 @@ def char_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    norm = managed_persist(
-        docs.select("doc_id", "lang", "source", "n_chars", dd.normalized_text("text").alias("t"))
-    )
+    norm = docs.select("doc_id", "lang", "source", "n_chars", dd.normalized_text("text").alias("t"))
     toks = norm.select(F.explode(F.split("t", " ")).alias("tk"))
     tok_stats = toks.agg(
         F.count(F.lit(1)).alias("n_tokens"),
@@ -4122,9 +4126,8 @@ def corpus_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: one explode → token-count shuffle builds the vocabulary;
 # the top-K head is tiny and BROADCAST back against the token stream
 # (the stream stays unshuffled); per-doc then per-source aggregates are
-# map-side combined. The token stream is persisted once — it has two
-# consumers (vocabulary build + probe), and re-exploding would pay the
-# Generate re-evaluation tax twice.
+# map-side combined. The token stream has two consumers (vocabulary
+# build + probe); a persist of it measured slower than re-exploding.
 # ---------------------------------------------------------------------------
 @query(
     "rare_token_ratio",
@@ -4154,11 +4157,9 @@ def corpus_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rare_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    tok = managed_persist(
-        docs.select(
-            "doc_id",
-            F.explode(F.split(dd.normalized_text("text"), " ")).alias("tk"),
-        )
+    tok = docs.select(
+        "doc_id",
+        F.explode(F.split(dd.normalized_text("text"), " ")).alias("tk"),
     )
     vocab = (
         tok.groupBy("tk")
@@ -4319,7 +4320,7 @@ _LN2 = 0.6931471805599453
 )
 def vocab_jsd_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    st = managed_persist(
+    st = (
         docs.select(
             "source",
             F.explode(F.split(dd.normalized_text("text"), " ")).alias("tk"),
@@ -4511,7 +4512,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         bk.join(F.broadcast(pr), bk.vec_id == pr.p_id)
         .select("p_id", "pe", "bucket")
     )
-    cand = managed_persist(
+    cand = (
         bk.join(F.broadcast(pbk), "bucket")
         .filter(F.col("vec_id") != F.col("p_id"))
         .select(
@@ -4710,9 +4711,7 @@ def _o_minhash_pr() -> str:
 @query("minhash_pr_audit", oracle=_o_minhash_pr())
 def minhash_pr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = _shingles_table(spark, sf_dir)
-    sigs = managed_persist(
-        dd.with_minhash_bands(shingled.select("doc_id", "shingles"))
-    )
+    sigs = dd.with_minhash_bands(shingled.select("doc_id", "shingles"))
     cand = dd.lsh_candidate_pairs(sigs, n_docs=_n_docs(spark, sf_dir)).select(
         "a_id", "b_id", F.lit(True).alias("is_cand")
     )
@@ -5417,7 +5416,6 @@ def matryoshka_dim_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ct"),
         )
     )
-    scored = managed_persist(scored)
     wf = Window.partitionBy("p_id").orderBy(F.desc("cf"), "vec_id")
     wt = Window.partitionBy("p_id").orderBy(F.desc("ct"), "vec_id")
     tf = (
@@ -5516,22 +5514,18 @@ def rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    toks = managed_persist(
-        docs.select(
-            "doc_id",
-            F.posexplode(F.split(normalized_text("text"), " ")).alias("pos", "word"),
-        ).withColumn("is_stop", F.col("word").isin(*EN_STOPWORDS))
-    )
+    toks = docs.select(
+        "doc_id",
+        F.posexplode(F.split(normalized_text("text"), " ")).alias("pos", "word"),
+    ).withColumn("is_stop", F.col("word").isin(*EN_STOPWORDS))
     wdoc = Window.partitionBy("doc_id").orderBy("pos")
     marked = toks.withColumn(
         "gid",
         F.count_if(F.col("is_stop")).over(wdoc.rowsBetween(Window.unboundedPreceding, 0)),
     )
     wph = Window.partitionBy("doc_id", "gid")
-    pw = managed_persist(
-        marked.filter(~F.col("is_stop")).withColumn(
-            "plen", F.count(F.lit(1)).over(wph)
-        )
+    pw = marked.filter(~F.col("is_stop")).withColumn(
+        "plen", F.count(F.lit(1)).over(wph)
     )
     wscore = (
         pw.groupBy("word")
@@ -5893,6 +5887,7 @@ def mutual_nearest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persist: both direction ranks consume the same cross — compute the
     # 64-dim cosine once per pair, not once per rank direction
+    # pays: warm wall without it 1.32x/1.61x (sf0.01/sf0.1)
     pairs = managed_persist(
         a.crossJoin(b).select(
             "a_id",
@@ -6002,6 +5997,7 @@ def mutual_nearest_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate relation — the 64-dim cosine is computed once per
     # surviving pair, and pair count is Σ bucket_a x bucket_b, never
     # |A| x |B|
+    # pays: warm wall without it 1.07x/1.08x (sf0.01/sf0.1)
     pairs = managed_persist(
         a.join(b, "bucket").select(
             "a_id",
@@ -6215,6 +6211,7 @@ def margin_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one materialized pair relation feeds the forward means, backward
     # means, AND the final margin rank — the cosine is computed once
+    # pays: warm wall without it 1.24x/2.16x (sf0.01/sf0.1)
     pairs = managed_persist(
         a.crossJoin(b).select(
             "a_id",
@@ -6362,6 +6359,7 @@ def margin_scored_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # forward means, backward means, AND the final margin rank — the
     # 64-dim cosine is computed once per SURVIVING pair, and pair count
     # is Σ bucket_a x bucket_b, never |A| x |B|
+    # pays at sf0.1: warm wall without it 1.01x/1.17x (sf0.01/sf0.1)
     pairs = managed_persist(
         a.join(b, "bucket").select(
             "a_id",
@@ -6492,9 +6490,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus half of `sigs` is read from the persisted signature store,
     # not recomputed (see block comment)
     shingled = _shingles_table(spark, sf_dir, distinct=False)
-    sigs = managed_persist(
-        dd.with_minhash_bands(shingled.select("doc_id", "shingles"))
-    )
+    sigs = dd.with_minhash_bands(shingled.select("doc_id", "shingles"))
     bands = sigs.select("doc_id", F.posexplode("bands").alias("band", "key"))
     new_b = bands.filter(is_batch).select(
         F.col("doc_id").alias("new_id"), "band", "key"
@@ -6644,6 +6640,7 @@ def boilerplate_segment_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("seg"),
         )
     )
+    # pays at sf0.1 with sd's persist: warm wall without both 0.93x/1.22x (sf0.01/sf0.1)
     segs = managed_persist(segs)
     # df is corpus-sized: groupBy + shuffle join, never broadcast, never a
     # per-row window set (see block comment). Catalyst cannot size the
@@ -6655,6 +6652,7 @@ def boilerplate_segment_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         dfs = dfs.hint("shuffle_hash")
     # persisted: BOTH downstream aggregates (per-doc ratios and
     # per-source distinct boilerplate segments) read this join
+    # pays at sf0.1 with segs' persist: warm wall without both 0.93x/1.22x (sf0.01/sf0.1)
     sd = managed_persist(segs.join(dfs, "seg"))
     per_doc = sd.groupBy("doc_id", "source").agg(
         F.count(F.lit(1)).alias("n_seg"),
@@ -6781,7 +6779,7 @@ def pq_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # failed embeddings are not quantized (same index policy as
     # embedding_ann_ivf; matching WHERE in every oracle sub-CTE)
-    emb = managed_persist(
+    emb = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("embedding").isNotNull())
         .repartition(spark.sparkContext.defaultParallelism)
@@ -6792,24 +6790,22 @@ def pq_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of job overhead at sf0.01 for identical arithmetic, r13 envelope).
     # Every per-m relation below is the old one with m added to its
     # grouping/partition keys, so values are unchanged by construction.
-    sub = managed_persist(
-        emb.select(
-            "vec_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(m).alias("m"),
-                            F.slice(
-                                "embedding", m * _PQ_SUB + 1, _PQ_SUB
-                            ).alias("e"),
-                        )
-                        for m in range(_PQ_M)
-                    ]
-                )
-            ).alias("s"),
-        ).select("vec_id", F.col("s.m").alias("m"), F.col("s.e").alias("e"))
-    )
+    sub = emb.select(
+        "vec_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(m).alias("m"),
+                        F.slice(
+                            "embedding", m * _PQ_SUB + 1, _PQ_SUB
+                        ).alias("e"),
+                    )
+                    for m in range(_PQ_M)
+                ]
+            )
+        ).alias("s"),
+    ).select("vec_id", F.col("s.m").alias("m"), F.col("s.e").alias("e"))
     # seeds per m = the subvectors of the _PQ_K lowest vec_ids (the old
     # orderBy(vec_id).limit(K) picked the same K ids for every m)
     seed_ids = emb.select("vec_id").orderBy("vec_id").limit(_PQ_K)
@@ -6973,7 +6969,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "p", sk.kmv_hash(F.col("kgram")).alias("h"))
     )
     winnow = Window.partitionBy("doc_id").orderBy("p").rowsBetween(1 - _WIN_W, 0)
-    fps = managed_persist(
+    fps = (
         kg.select("doc_id", "p", F.min("h").over(winnow).alias("fp"))
         .filter(F.col("p") >= _WIN_W - 1)
         .select("doc_id", "fp")
@@ -7093,6 +7089,7 @@ def _dbscan_classify(
         if n_planes is None
         else srp_bucket("embedding", n_planes=n_planes)
     )
+    # pays at sf0.1: embedding_dbscan_core warm wall without it 0.96x/1.09x (sf0.01/sf0.1)
     bucketed = managed_persist(
         emb.select("vec_id", "label", "embedding", bucket.alias("bucket"))
     )
@@ -7103,6 +7100,7 @@ def _dbscan_classify(
         F.col("vec_id").alias("y"), F.col("embedding").alias("eb"), "bucket"
     )
     cq = F.floor(cosine("ea", "eb") * 1_000_000_000 + F.lit(0.5)).cast("long")
+    # pays: warm wall without it core 1.09x/1.61x, sized 1.55x/1.67x (sf0.01/sf0.1)
     nbr = managed_persist(
         a.join(b, "bucket")
         .filter(F.col("x") != F.col("y"))
@@ -7119,6 +7117,7 @@ def _dbscan_classify(
         # them — the same BROADCAST_SAFE_DOCS-gated shuffle_hash pin the
         # rest of the dedup/embedding family applies
         ncnt = ncnt.hint("shuffle_hash")
+    # pays at sf0.01: embedding_dbscan_sized warm wall without it 1.06x/0.99x (sf0.01/sf0.1)
     flags = managed_persist(
         emb.select("vec_id", "label")
         .join(ncnt, "vec_id", "left")

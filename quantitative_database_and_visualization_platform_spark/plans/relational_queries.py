@@ -1799,7 +1799,7 @@ def weighted_median_unit_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 # balance; a large one calls for salting or AQE skew-join.
 #
 # Scale shape: one aggregate per audited key (each a uniform-key
-# shuffle) over ONE persisted narrow projection of the fact, then a
+# shuffle) over ONE narrow projection of the fact, then a
 # per-key TakeOrderedAndProject for the top-3 — never a rank window
 # partitioned only by key_col, which funnels every key count (15M rows
 # for l_orderkey at the 100x sweep) through a single task (measured
@@ -1832,10 +1832,8 @@ def weighted_median_unit_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import managed_persist
-
     cols = ("l_partkey", "l_suppkey", "l_orderkey")
-    li = managed_persist(load_table(spark, sf_dir, "lineitem").select(*cols))
+    li = load_table(spark, sf_dir, "lineitem").select(*cols)
     outs = []
     for c in cols:
         per = li.groupBy(F.col(c).alias("k")).agg(F.count(F.lit(1)).alias("c"))

@@ -428,8 +428,7 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: the per-journey event list is bounded by events/user/day
 # (never corpus-sized); the trigram explode is linear in events; the
-# head is TakeOrderedAndProject. The path array is persisted before the
-# explode (Generate re-collapse trap).
+# head is TakeOrderedAndProject.
 # ---------------------------------------------------------------------------
 @query(
     "event_path_trigrams",
@@ -449,10 +448,8 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import managed_persist
-
     ev = _events(spark, sf_dir)
-    j = managed_persist(
+    j = (
         ev.groupBy("user_id", F.col("ts").cast("date").alias("day"))
         .agg(
             F.transform(

@@ -100,12 +100,20 @@ def _quiet_window_warnings(spark: SparkSession) -> SparkSession:
 
 
 # --- managed persist registry -----------------------------------------------
-# Query builders persist() intermediates (dedup signatures, bucketed
-# tables) that the CALLER materializes; in a long-lived session running
-# many queries those cached blocks would otherwise accumulate and pressure
-# executor memory. Builders register via managed_persist; harnesses
-# (bench.py, oracle_check) call release_managed() after each query's
-# action completes. Deliberately session-lived tables (bars, alpha, ...)
+# A builder persists an intermediate for one of two reasons only:
+#  (a) the persist pins ONE materialization of a sampled or
+#      nondeterministic partitioning (global_ntile's spark_partition_id),
+#      so every consumer of it reads the same rows; or
+#  (b) an in-session A/B of the query's warm wall (persist vs none,
+#      alternating runs, sf0.01 and sf0.1) shows that it pays. Spark
+#      already reuses identical exchanges within one plan, so a persist
+#      that only de-duplicates a subtree tends to cost more than it saves.
+# Each call site carries its reason in one line. A construction that
+# registers a persist is never kept by a prepared entry
+# (plans.registry._prepared), so the query is rebuilt on every call.
+# The CALLER materializes the query; harnesses (bench.py, oracle_check)
+# call release_managed() after its action completes, so cached blocks do
+# not accumulate. Deliberately session-lived tables (bars, alpha, ...)
 # are localCheckpoint leaves in sources.catalog.shared, not registered.
 
 _MANAGED: list = []

@@ -535,14 +535,15 @@ def test_boilerplate_df_join_debroadcasts_past_threshold(spark, monkeypatch):
     aggregate class from the r9 100x audit): past BROADCAST_SAFE_DOCS
     the join must be a shuffle join, never a broadcast of the df side.
     The threshold is monkeypatched to 0 so the contract is assertable at
-    test scale."""
+    test scale; the builder itself runs, since a plan kept by an earlier
+    call would not see the patched constant."""
     from quantitative_database_and_visualization_platform_spark.pipeline import dedup as dd
     from quantitative_database_and_visualization_platform_spark.plans import QUERIES
     from quantitative_database_and_visualization_platform_spark.session import release_managed
 
     monkeypatch.setattr(dd, "BROADCAST_SAFE_DOCS", 0)
     try:
-        plan = _plan(QUERIES["boilerplate_segment_ratio"](spark, SF))
+        plan = _plan(QUERIES["boilerplate_segment_ratio"].__wrapped__(spark, SF))
     finally:
         release_managed()
     assert "ShuffledHashJoin [seg" in plan, plan[:3000]

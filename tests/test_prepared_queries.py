@@ -145,3 +145,66 @@ def test_registered_queries_keep_their_defining_module():
         # module-level name)
         if "<locals>" not in run.__wrapped__.__qualname__:
             assert getattr(module, run.__wrapped__.__name__) is run.__wrapped__, name
+
+
+_NTILE_PIN = "global_ntile persists one spark_partition_id materialization (correctness pin)"
+_COLLECTS = "iterates in Python over collected counts or edges (runs jobs)"
+_PAYS = "registers a managed_persist that measured faster than the persist-free query"
+
+# Non-alpha queries that a prepared entry never keeps, and why: each one
+# registers a managed_persist or runs a Spark job inside its construction,
+# so every call rebuilds it.
+NEVER_KEPT = {
+    "histogram_equi_depth": _NTILE_PIN,
+    "length_quality_grid": _NTILE_PIN,
+    "nation_spend_quartiles": _NTILE_PIN,
+    "rfm_customer_scores": _NTILE_PIN,
+    "lm_perplexity_buckets": _NTILE_PIN,
+    "trade_reachability_hops": _COLLECTS,
+    "pagerank_nation_trade": _COLLECTS,
+    "dedup_connected_components": _COLLECTS,
+    "neardup_cluster_sizes": _COLLECTS,
+    "neardup_canonical": _COLLECTS,
+    "semdedup_prune": _COLLECTS,
+    "bloom_decontamination": "collects the Bloom filter bitmap into a literal (runs jobs)",
+    "dedup_simhash": _PAYS,
+    "dedup_simhash_wide": _PAYS,
+    "embedding_neardup": _PAYS,
+    "repetition_quality": _PAYS,
+    "exact_substring_dedup": _PAYS,
+    "repeated_span_pairs": _PAYS,
+    "dsir_importance": _PAYS,
+    "source_overlap_matrix": _PAYS,
+    "zipf_token_curve": _PAYS,
+    "minhash_accuracy_audit": _PAYS,
+    "vocab_coverage_curve": _PAYS,
+    "hll_distinct_by_source": _PAYS,
+    "bm25_topk": _PAYS,
+    "mutual_nearest_pairs": _PAYS,
+    "mutual_nearest_pairs_ann": _PAYS,
+    "margin_scored_pairs": _PAYS,
+    "margin_scored_pairs_ann": _PAYS,
+    "boilerplate_segment_ratio": _PAYS,
+    "embedding_dbscan_core": _PAYS,
+    "embedding_dbscan_sized": _PAYS,
+    "top_correlated_pairs": _PAYS,
+    "cointegration_screen": _PAYS,
+    "cointegration_screen_blocked": _PAYS,
+}
+
+
+def test_never_kept_census(spark):
+    """Every non-alpha query is kept by its second construction unless
+    NEVER_KEPT names it: a new persist or construction-time collect
+    fails here, and so does a listed query that became keepable."""
+    names = [n for n, q in QUERIES.items() if not q.__module__.endswith(".alpha_queries")]
+    for _ in range(2):
+        for name in names:
+            try:
+                QUERIES[name](spark, SF)
+            finally:
+                release_managed()
+    key = context_key(spark)
+    not_kept = {n for n in names if (key, "prepared", n, SF) not in SHARED_TABLES}
+    assert not_kept - set(NEVER_KEPT) == set(), "newly never kept"
+    assert set(NEVER_KEPT) - not_kept == set(), "now kept: drop from NEVER_KEPT"
